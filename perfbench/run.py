@@ -19,10 +19,12 @@ live under ``perfbench/.work``.
 from __future__ import annotations
 
 import argparse
+import ctypes
 import json
 import os
 import resource
 import shutil
+import signal
 import statistics
 import sys
 import tempfile
@@ -120,6 +122,49 @@ def peak_rss_mb(spark) -> tuple[float, float]:
         if line.startswith("VmHWM:"):
             jvm_kb = int(line.split()[1])
     return jvm_kb / 1024, resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024
+
+
+def become_subreaper() -> None:
+    """Make this process the parent of every orphaned descendant (a
+    worker whose JVM has exited, say), so that :func:`stop_descendants`
+    can find and reap it."""
+    PR_SET_CHILD_SUBREAPER = 36
+    ctypes.CDLL(None, use_errno=True).prctl(PR_SET_CHILD_SUBREAPER, 1, 0, 0, 0)
+
+
+def descendants() -> list[int]:
+    children: dict[int, list[int]] = {}
+    for stat in Path("/proc").glob("[0-9]*/stat"):
+        try:
+            ppid = int(stat.read_text().rsplit(")", 1)[1].split()[1])
+        except (OSError, IndexError, ValueError):  # the process has exited
+            continue
+        children.setdefault(ppid, []).append(int(stat.parent.name))
+    out, todo = [], list(children.get(os.getpid(), []))
+    while todo:
+        pid = todo.pop()
+        out.append(pid)
+        todo.extend(children.get(pid, []))
+    return out
+
+
+def stop_descendants(grace_s: float = 10.0) -> None:
+    """Terminate every process still running under this one, kill what
+    outlives ``grace_s``, and wait until each has ended."""
+    for sig in (signal.SIGTERM, signal.SIGKILL):
+        deadline = time.monotonic() + grace_s
+        for pid in descendants():
+            try:
+                os.kill(pid, sig)
+            except ProcessLookupError:
+                pass
+        while time.monotonic() < deadline:
+            try:
+                while os.waitpid(-1, os.WNOHANG)[0]:
+                    pass
+            except ChildProcessError:
+                return
+            time.sleep(0.05)
 
 
 def stop_spark(spark) -> None:
@@ -244,6 +289,9 @@ def layer_metrics(tracer, stats, cores, untraced_groups, traced_s, untraced_s, s
 
 def main(argv=None) -> int:
     args = parse_args(argv)
+    become_subreaper()
+    # a terminated run still stops the processes it started
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(128 + signal.SIGTERM))
     sys.path.insert(0, str(ROOT))
     # the program under test; absent outside a checkout of the repository
     import workloads as W
@@ -380,8 +428,11 @@ def main(argv=None) -> int:
             )
         app_id = sc.applicationId
     finally:
-        if spark is not None:
-            stop_spark(spark)
+        try:
+            if spark is not None:
+                stop_spark(spark)
+        finally:
+            stop_descendants()
     phase("stop")
 
     if tracer:

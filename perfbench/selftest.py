@@ -12,6 +12,7 @@ rejects a perturbed output: one changed cell, and one dropped row.
 from __future__ import annotations
 
 import json
+import shutil
 import subprocess
 import sys
 from pathlib import Path
@@ -80,7 +81,11 @@ def check_perturbed() -> None:
         out = wl.backtest_frame(inp, inp.read())
         frames = {"backtest_folds": out}
         sqls = {"backtest_folds": wl.oracle_sqls(inp)["backtest_folds"]}
-        expected = W.reference_sums(spark, W.oracle_tables(turns_dir, sqls), frames)
+        tables_dir = R.WORK / "tmp" / "selftest-reference"
+        shutil.rmtree(tables_dir, ignore_errors=True)
+        tables_dir.mkdir(parents=True)
+        W.oracle_tables(turns_dir, sqls, tables_dir)
+        expected = W.reference_sums(spark, W.read_tables(tables_dir, sqls), frames)
         if W.checksum(out) != expected["backtest_folds"]:
             raise AssertionError("unperturbed backtest output fails the check")
         one = F.col("conv_id") == F.lit("conv0000001")

@@ -15,16 +15,17 @@ from __future__ import annotations
 
 import hashlib
 import json
-import multiprocessing
 import os
 import shutil
+import subprocess
+import sys
 import time
-from concurrent.futures import ProcessPoolExecutor
 from dataclasses import dataclass
 from datetime import datetime
 from pathlib import Path
 
 import duckdb
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, FloatType
@@ -150,20 +151,32 @@ def materialize(df: DataFrame) -> int:
     return int(r["n"])
 
 
-def oracle_tables(turns_dir: Path, sqls: dict[str, str]) -> dict:
-    """Run each oracle query on DuckDB over the generated table."""
+def oracle_tables(turns_dir: Path, sqls: dict[str, str], out_dir: Path) -> None:
+    """Run each oracle query on DuckDB over the generated table and save
+    its result as an Arrow file ``<name>.arrow`` in ``out_dir``."""
     con = duckdb.connect()
     try:
         con.execute("SET TimeZone='UTC'")
         con.execute(f"CREATE VIEW turns AS SELECT * FROM read_parquet('{turns_dir}/*.parquet')")
-        out = {}
         for name, sql in sqls.items():
             if entry._CONV_CTE not in sql:
                 raise ValueError(f"oracle query {name!r} does not read the transcript CTE")
-            out[name] = con.execute(sql.replace(entry._CONV_CTE, _TURNS_CTE)).arrow()
-        return out
+            table = con.execute(sql.replace(entry._CONV_CTE, _TURNS_CTE)).arrow()
+            with pa.OSFile(str(out_dir / f"{name}.arrow"), "wb") as f, pa.ipc.new_file(
+                f, table.schema
+            ) as w:
+                w.write_table(table)
     finally:
         con.close()
+
+
+def read_tables(out_dir: Path, names) -> dict:
+    """The tables :func:`oracle_tables` saved."""
+    out = {}
+    for name in names:
+        with pa.memory_map(str(out_dir / f"{name}.arrow")) as f:
+            out[name] = pa.ipc.open_file(f).read_all()
+    return out
 
 
 def reference_sums(
@@ -186,21 +199,32 @@ class Reference:
 
     They depend only on the input, the oracle queries and the engine's
     output schema, so they are kept beside the input and computed once.
-    DuckDB runs in a child process, so that its memory stays out of the
-    driver's peak RSS; it is started here and runs while the caller
-    warms the engine up."""
+    DuckDB runs in a child process (this file run as a script), so that
+    its memory stays out of the driver's peak RSS; it is started here and
+    runs while the caller warms the engine up; :meth:`sums` waits for it."""
 
     def __init__(self, inp: Inputs, wl: "Workload"):
         self.inp, self.sqls = inp, wl.oracle_sqls(inp)
         key = hashlib.md5(json.dumps(self.sqls, sort_keys=True).encode()).hexdigest()
         self.path = inp.cache_dir / f"reference-{wl.name}-{key}.json"
-        self.pool = None
+        self.tables_dir = inp.cache_dir / f"reference-{wl.name}-{key}.tables"
+        self.proc = None
         if not self.path.exists():
             self._start()
 
     def _start(self) -> None:
-        self.pool = ProcessPoolExecutor(1, mp_context=multiprocessing.get_context("spawn"))
-        self.tables = self.pool.submit(oracle_tables, self.inp.turns_dir, self.sqls)
+        shutil.rmtree(self.tables_dir, ignore_errors=True)
+        self.tables_dir.mkdir(parents=True)
+        here = Path(__file__).resolve()
+        root, path = str(here.parent.parent), os.environ.get("PYTHONPATH")
+        self.proc = subprocess.Popen(
+            [sys.executable, str(here), str(self.inp.turns_dir), str(self.tables_dir)],
+            stdin=subprocess.PIPE,
+            text=True,
+            env={**os.environ, "PYTHONPATH": f"{root}{os.pathsep}{path}" if path else root},
+        )
+        self.proc.stdin.write(json.dumps(self.sqls))
+        self.proc.stdin.close()
 
     def sums(self, frames: dict[str, DataFrame]) -> dict[str, Checksum]:
         schemas = {name: df.schema.simpleString() for name, df in frames.items()}
@@ -208,12 +232,14 @@ class Reference:
             kept = json.loads(self.path.read_text())
             if kept["schemas"] == schemas:
                 return {name: tuple(v) for name, v in kept["sums"].items()}
-        if self.pool is None:
+        if self.proc is None:
             self._start()
-        tables = self.tables.result()
-        self.pool.shutdown()
+        if self.proc.wait() != 0:
+            raise RuntimeError(f"DuckDB reference exited with code {self.proc.returncode}")
+        tables = read_tables(self.tables_dir, self.sqls)
         sums = reference_sums(self.inp.spark, tables, frames)
         self.path.write_text(json.dumps({"schemas": schemas, "sums": sums}))
+        shutil.rmtree(self.tables_dir)
         return sums
 
 
@@ -446,3 +472,8 @@ class TurnFeatures(Workload):
 
 
 WORKLOADS = {w.name: w for w in (CheckpointedBacktest, TurnFeatures)}
+
+
+if __name__ == "__main__":
+    # python3 workloads.py TURNS_DIR OUT_DIR < queries.json
+    oracle_tables(Path(sys.argv[1]), json.load(sys.stdin), Path(sys.argv[2]))
