@@ -472,10 +472,10 @@ def _q_cv_fold_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     all earlier boundaries (expanding) or boundary i-1 (sliding)."""
     from pyspark.sql import functions as F
 
+    from kkbox_churn_prediction_spark.operators.asof import cutoff_grid
     from kkbox_churn_prediction_spark.plans.folds import assign_cv_folds
     from kkbox_churn_prediction_spark.sources.events import (
         conversations_from_events,
-        cutoff_grid,
         cutoffs_from_events,
     )
 

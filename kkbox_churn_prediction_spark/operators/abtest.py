@@ -197,14 +197,17 @@ def two_proportion_z(
     )
     na = F.col("n_a").cast("double")
     nb = F.col("n_b").cast("double")
-    # try_divide mirrors the oracle's RAW s/n division: a missing or
-    # empty arm has an UNDEFINED rate (NULL), exactly DuckDB's 0/0
-    # (the old otherwise-0.0 guard diverged on empty input; r5
-    # empty-sweep). The z guard below still collapses NULL to 0.0.
+    # every division is try_divide, mirroring the oracle's raw double
+    # division, which DuckDB evaluates to NULL on a zero divisor: an
+    # empty arm has an UNDEFINED rate (NULL), and with exactly one arm
+    # empty the 1/n term is NULL too, so se2 is NULL and the z guard
+    # below collapses it to 0.0 instead of raising DIVIDE_BY_ZERO
     p_a = F.try_divide(F.col("s_a").cast("double"), na)
     p_b = F.try_divide(F.col("s_b").cast("double"), nb)
     pool = F.try_divide((F.col("s_a") + F.col("s_b")).cast("double"), na + nb)
-    se2 = pool * (F.lit(1.0) - pool) * (F.lit(1.0) / na + F.lit(1.0) / nb)
+    se2 = pool * (F.lit(1.0) - pool) * (
+        F.try_divide(F.lit(1.0), na) + F.try_divide(F.lit(1.0), nb)
+    )
     z = F.when(se2 > 0, (p_a - p_b) / F.sqrt(se2)).otherwise(F.lit(0.0))
     return one.select(
         "n_a",

@@ -26,6 +26,9 @@ Physical strategy at 100 TB:
   ``repartitionByRange(conv_id)`` + ``sortWithinPartitions(conv_id,
   ts)`` (see ``plans.backfill``) so repeated operators reuse the
   layout. AQE skew-join splits mega-conversation partitions.
+
+The whole as-of family shares :func:`cutoff_grid` (the entity×cutoff
+grid) and :func:`nearest_turn` (the nearest-turn pick).
 """
 
 from __future__ import annotations
@@ -102,6 +105,68 @@ def asof_join_entity_cutoffs(
     return turns.join(g, cond, "inner").drop("_g_conv_id")
 
 
+def cutoff_grid(turns: DataFrame, cutoffs: DataFrame) -> DataFrame:
+    """Entity × cutoff grid — the reference's ``label_index``
+    (``features/features_comprehensive.sql:12-19``): the left side
+    every feature and label joins onto, so an entity with an empty
+    window keeps a default row. The cutoff list is tiny, so the cross
+    join broadcasts it; the grid keeps the entity side's partitioning.
+    """
+    return turns.select("conv_id").distinct().crossJoin(F.broadcast(cutoffs))
+
+
+def nearest_turn(
+    turns: DataFrame,
+    cutoffs: DataFrame,
+    cond: Column,
+    payload_cols: tuple[str, ...],
+    *,
+    latest: bool,
+) -> DataFrame:
+    """Sparse nearest-turn pick: per (conv_id, cutoff_ts) with a turn
+    passing ``cond``, the ``_best`` struct ``(_us, _idx, _p_<col>...)``
+    of the earliest such turn, or the ``latest``. ONE struct min/max by
+    (ts, turn_idx) — unique within a conversation, so the payload is
+    deterministic — over broadcast cutoffs (no fact shuffle), with
+    map-side partials and no window sort of the replicated stream.
+    """
+    joined = turns.join(F.broadcast(cutoffs), cond, "inner")
+    best = F.struct(
+        F.unix_micros(F.col("ts")).alias("_us"),
+        F.col("turn_idx").alias("_idx"),
+        *[F.col(c).alias(f"_p_{c}") for c in payload_cols],
+    )
+    pick = (F.max if latest else F.min)(best).alias("_best")
+    return joined.groupBy("conv_id", "cutoff_ts").agg(pick)
+
+
+def _nearest_on_grid(
+    turns: DataFrame,
+    cutoffs: DataFrame,
+    cond: Column,
+    payload_cols: tuple[str, ...],
+    *,
+    latest: bool,
+) -> DataFrame:
+    """:func:`nearest_turn` on the entity grid: an empty window is an
+    explicit NULL row with ``found=false``."""
+    nearest = nearest_turn(turns, cutoffs, cond, payload_cols, latest=latest)
+    out = cutoff_grid(turns, cutoffs).join(nearest, ["conv_id", "cutoff_ts"], "left")
+    best_us, cutoff_us = F.col("_best._us"), F.unix_micros(F.col("cutoff_ts"))
+    if latest:
+        prefix, dist = "last", (cutoff_us - best_us).alias("staleness_us")
+    else:
+        prefix, dist = "next", (best_us - cutoff_us).alias("gap_us")
+    return out.select(
+        "conv_id",
+        "cutoff_ts",
+        best_us.alias(f"{prefix}_ts_us"),
+        dist,
+        *[F.col(f"_best._p_{c}").alias(f"{prefix}_{c}") for c in payload_cols],
+        F.col("_best").isNotNull().alias("found"),
+    )
+
+
 def asof_forward_nearest(
     turns: DataFrame,
     cutoffs: DataFrame,
@@ -120,15 +185,9 @@ def asof_forward_nearest(
     itself, for features like "what does the user do next" or
     time-to-next-touch).
 
-    Determinism: the argmin is ONE ``min_by``-style struct minimum
-    ordered by (ts, turn_idx) — turn_idx breaks timestamp ties, and
-    (conv_id, turn_idx) is unique, so the selected payload is total-
-    order deterministic. Exact integer micros for the gap.
-
-    Shape: broadcast the cutoff list onto the fact stream (no fact
-    shuffle — the J1 discipline), ONE (conv_id, cutoff_ts) hash agg
-    with map-side partials, then a left join back onto the entity
-    grid so empty horizons surface as explicit NULL rows.
+    Determinism and shape: :func:`nearest_turn` (struct minimum by
+    (ts, turn_idx)) on the entity grid; exact integer micros for the
+    gap.
     """
     lo = (
         turns["ts"] >= cutoffs["cutoff_ts"]
@@ -138,26 +197,7 @@ def asof_forward_nearest(
     hi = turns["ts"] <= cutoffs["cutoff_ts"] + F.expr(
         f"INTERVAL {int(horizon_days)} DAYS"
     )
-    joined = turns.join(F.broadcast(cutoffs), lo & hi, "inner")
-    pick = F.min(
-        F.struct(
-            F.unix_micros(F.col("ts")).alias("_us"),
-            F.col("turn_idx").alias("_idx"),
-            *[F.col(c).alias(f"_p_{c}") for c in payload_cols],
-        )
-    ).alias("_best")
-    nearest = joined.groupBy("conv_id", "cutoff_ts").agg(pick)
-    grid = turns.select("conv_id").distinct().crossJoin(F.broadcast(cutoffs))
-    out = grid.join(nearest, ["conv_id", "cutoff_ts"], "left")
-    cols = [
-        "conv_id",
-        "cutoff_ts",
-        F.col("_best._us").alias("next_ts_us"),
-        (F.col("_best._us") - F.unix_micros(F.col("cutoff_ts"))).alias("gap_us"),
-    ]
-    cols += [F.col(f"_best._p_{c}").alias(f"next_{c}") for c in payload_cols]
-    cols.append(F.col("_best").isNotNull().alias("found"))
-    return out.select(*cols)
+    return _nearest_on_grid(turns, cutoffs, lo & hi, payload_cols, latest=False)
 
 
 def asof_backward_nearest(
@@ -173,43 +213,16 @@ def asof_backward_nearest(
     (``inclusive=True`` → at-or-before), optionally bounded by
     ``lookback_days`` (the feature-TTL semantic: a snapshot older than
     the budget is no snapshot), with its timestamp, staleness, and
-    payload columns — the generic form of
-    ``relational.last_value_before_cutoff`` (one column) for whole-row
-    "latest state as of t" features.
+    payload columns — the whole-row form of
+    ``relational.last_value_before_cutoff``, which is the same sparse
+    pick projected to one column.
 
-    Determinism: ONE ``max_by``-style struct maximum ordered by
+    Determinism and shape: :func:`nearest_turn` (struct maximum by
     (ts, turn_idx) — at a tied timestamp the higher turn_idx is the
-    later turn, and (conv_id, turn_idx) is unique, so the payload is
-    total-order deterministic. Exact integer micros for staleness.
-
-    Shape: identical to :func:`asof_forward_nearest` — broadcast
-    cutoffs (no fact shuffle), ONE hash agg with map-side partials
-    (no window sort of the turn stream — the same algebraic-argmax
-    rewrite VERDICT r1 asked of last_value_before_cutoff), left join
-    onto the entity grid for explicit NULL rows.
+    later turn) on the entity grid; exact integer micros for
+    staleness.
     """
     cond = leak_guard(
         turns["ts"], cutoffs["cutoff_ts"], lookback_days, inclusive=inclusive
     )
-    joined = turns.join(F.broadcast(cutoffs), cond, "inner")
-    pick = F.max(
-        F.struct(
-            F.unix_micros(F.col("ts")).alias("_us"),
-            F.col("turn_idx").alias("_idx"),
-            *[F.col(c).alias(f"_p_{c}") for c in payload_cols],
-        )
-    ).alias("_best")
-    latest = joined.groupBy("conv_id", "cutoff_ts").agg(pick)
-    grid = turns.select("conv_id").distinct().crossJoin(F.broadcast(cutoffs))
-    out = grid.join(latest, ["conv_id", "cutoff_ts"], "left")
-    cols = [
-        "conv_id",
-        "cutoff_ts",
-        F.col("_best._us").alias("last_ts_us"),
-        (F.unix_micros(F.col("cutoff_ts")) - F.col("_best._us")).alias(
-            "staleness_us"
-        ),
-    ]
-    cols += [F.col(f"_best._p_{c}").alias(f"last_{c}") for c in payload_cols]
-    cols.append(F.col("_best").isNotNull().alias("found"))
-    return out.select(*cols)
+    return _nearest_on_grid(turns, cutoffs, cond, payload_cols, latest=True)

@@ -8,12 +8,12 @@ collapses the whole multi-horizon ladder into one smooth recency
 signal per half-life.
 
 Spark-first shape: the decayed sum is a plain algebraic aggregate
-``SUM(0.5 ^ (age_days / half_life))`` over the same broadcast-cutoff
-as-of stream as the hard-window features (``operators/asof.py``), so
-it gets map-side partial aggregation and adds ZERO exchanges beyond
-the one (conv_id, cutoff_ts) shuffle the backfill already pays. At
-10^12 turns the lookback bound keeps the replicated stream linear in
-#cutoffs, exactly like A2.
+``SUM(0.5 ^ (age_days / half_life))`` over the hard-window features'
+as-of stream (``asof.asof_join_broadcast_cutoffs``) left-joined onto
+``asof.cutoff_grid``, so it gets map-side partial aggregation and adds
+ZERO exchanges beyond the one (conv_id, cutoff_ts) shuffle the
+backfill already pays. At 10^12 turns the lookback bound keeps the
+replicated stream linear in #cutoffs, exactly like A2.
 
 Numerics: weights are computed in double from integer microsecond
 ages — deterministic per row; only the summation order varies across
@@ -25,7 +25,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kkbox_churn_prediction_spark.operators.asof import asof_join_broadcast_cutoffs
+from kkbox_churn_prediction_spark.operators.asof import (
+    asof_join_broadcast_cutoffs,
+    cutoff_grid,
+)
 
 _US_PER_DAY = 86_400_000_000.0
 
@@ -41,15 +44,13 @@ def decayed_counts(
     cutoffs: DataFrame,
     half_lives_days: tuple[float, ...] = (1.0, 7.0),
     lookback_days: int = 28,
-    *,
-    inclusive: bool = False,
 ) -> DataFrame:
     """Per (conv_id, cutoff_ts): exponentially-decayed turn count and
     tool-call count for each half-life; entities with no prior turns
     fill 0.0 via the grid left-join (J6 semantics, fill=0 because a
     decayed count of nothing IS zero, unlike the -1 missing-feature
     sentinel of the hard-window family)."""
-    joined = asof_join_broadcast_cutoffs(turns, cutoffs, lookback_days, inclusive=inclusive)
+    joined = asof_join_broadcast_cutoffs(turns, cutoffs, lookback_days)
     age_days = (
         F.unix_micros(F.col("cutoff_ts")) - F.unix_micros(F.col("ts"))
     ) / F.lit(_US_PER_DAY)
@@ -65,7 +66,7 @@ def decayed_counts(
         )
     feats = joined.groupBy("conv_id", "cutoff_ts").agg(*aggs)
 
-    grid = turns.select("conv_id").distinct().crossJoin(F.broadcast(cutoffs))
+    grid = cutoff_grid(turns, cutoffs)
     fill = [
         F.coalesce(F.col(c), F.lit(0.0)).alias(c)
         for c in feats.columns

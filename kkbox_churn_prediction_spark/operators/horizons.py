@@ -87,7 +87,6 @@ def multi_horizon_aggregate(
     horizons_days: tuple[int, ...] = (1, 3, 7),
     specs: tuple[FeatureSpec, ...] = DEFAULT_SPECS,
     *,
-    recency: bool = True,
     full_window: bool = False,
 ) -> DataFrame:
     """Aggregate the as-of-joined turn stream per (conv_id, cutoff_ts).
@@ -124,13 +123,12 @@ def multi_horizon_aggregate(
         aggs.append(
             F.coalesce(F.sum(F.col("text_len")), F.lit(0)).alias("text_len_sum_full")
         )
-    if recency:
-        aggs.append(
-            F.coalesce(
-                F.unix_micros(F.col("cutoff_ts")) - F.max(F.unix_micros(F.col("ts"))),
-                F.lit(-1),
-            ).alias("micros_since_last_turn")
-        )
+    aggs.append(
+        F.coalesce(
+            F.unix_micros(F.col("cutoff_ts")) - F.max(F.unix_micros(F.col("ts"))),
+            F.lit(-1),
+        ).alias("micros_since_last_turn")
+    )
     out = joined.groupBy("conv_id", "cutoff_ts").agg(*aggs)
 
     for spec in distinct:
@@ -161,8 +159,7 @@ def multi_horizon_aggregate(
         ordered += [f"{spec.name}_{k}d" for k in horizons_days]
     if full_window:
         ordered += ["turn_cnt_full", "text_len_sum_full"]
-    if recency:
-        ordered.append("micros_since_last_turn")
+    ordered.append("micros_since_last_turn")
     return out.select(*ordered)
 
 

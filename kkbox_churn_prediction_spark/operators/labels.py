@@ -14,8 +14,8 @@ realizations, neither a theta join:
 
 - :func:`entity_labels`: qualifying future turns joined to the tiny
   broadcast cutoff list on the bounded range predicate, then a
-  min-aggregate — the horizon bound makes the replication factor
-  O(#cutoffs), never quadratic.
+  min-aggregate (:func:`first_qualifying_after`, shared with
+  ``operators/survival.py``), left-joined onto ``asof.cutoff_grid``.
 - :func:`time_to_next_qualifying_turn`: per-turn forward-looking
   window ``min(case when qualifying then ts end) over (rows between
   1 following and unbounded following)`` — pure window op, zero join
@@ -26,6 +26,34 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from kkbox_churn_prediction_spark.operators.asof import cutoff_grid
+
+
+def first_qualifying_after(
+    turns: DataFrame,
+    cutoffs: DataFrame,
+    horizon_days: int,
+    qualifying: Column | str,
+    *,
+    inclusive: bool = True,
+) -> DataFrame:
+    """The forward label window, sparse: per (conv_id, cutoff_ts) with a
+    qualifying turn in (cutoff, cutoff+horizon] (``inclusive``) /
+    (cutoff, cutoff+horizon) (strict), the ``unix_micros`` of the first
+    one as ``_next_us``; pairs with none have no row. The horizon
+    bound keeps the replication O(#cutoffs), never quadratic."""
+    q = F.expr(qualifying) if isinstance(qualifying, str) else qualifying
+    upper = F.col("cutoff_ts") + F.expr(f"INTERVAL {int(horizon_days)} DAYS")
+    in_horizon = (F.col("ts") > F.col("cutoff_ts")) & (
+        F.col("ts") <= upper if inclusive else F.col("ts") < upper
+    )
+    return (
+        turns.where(q)
+        .join(F.broadcast(cutoffs), in_horizon, "inner")
+        .groupBy("conv_id", "cutoff_ts")
+        .agg(F.min(F.unix_micros(F.col("ts"))).alias("_next_us"))
+    )
 
 
 def entity_labels(
@@ -40,18 +68,10 @@ def entity_labels(
     (cutoff, cutoff+horizon] (inclusive) / (cutoff, cutoff+horizon)
     (strict). Also emits ``micros_to_next_qualifying`` (-1 if none).
     """
-    q = F.expr(qualifying) if isinstance(qualifying, str) else qualifying
-    upper = F.col("cutoff_ts") + F.expr(f"INTERVAL {int(horizon_days)} DAYS")
-    in_horizon = (F.col("ts") > F.col("cutoff_ts")) & (
-        F.col("ts") <= upper if inclusive else F.col("ts") < upper
+    future = first_qualifying_after(
+        turns, cutoffs, horizon_days, qualifying, inclusive=inclusive
     )
-    future = (
-        turns.where(q)
-        .join(F.broadcast(cutoffs), in_horizon, "inner")
-        .groupBy("conv_id", "cutoff_ts")
-        .agg(F.min(F.unix_micros(F.col("ts"))).alias("_next_us"))
-    )
-    grid = turns.select("conv_id").distinct().crossJoin(F.broadcast(cutoffs))
+    grid = cutoff_grid(turns, cutoffs)
     return grid.join(future, ["conv_id", "cutoff_ts"], "left").select(
         "conv_id",
         "cutoff_ts",

@@ -45,26 +45,23 @@ def last_value_before_cutoff(
     cutoff (reference ``LAST(x ORDER BY tx_date)``,
     ``features/features_comprehensive.sql:90-91``).
 
-    Algebraic ``max_by(value, struct(ts, turn_idx))`` per (conv_id,
-    cutoff_ts) — a partial+final aggregate with map-side combine, so
+    The sparse backward pick of ``asof.nearest_turn`` — one struct
+    maximum by (ts, turn_idx) per (conv_id, cutoff_ts), a partial+final
+    aggregate with map-side combine — projected to ``last_<value>``:
     the shuffle carries one row per group instead of every replicated
-    turn, and there is NO window sort of the replicated stream (the
-    previous row_number-over-window formulation shuffled + sorted all
-    of it). Spark plans SortAggregate rather than HashAggregate here
-    (struct-typed buffers aren't hash-aggregable) — the sort is
-    partition-local over already-collapsed rows, not the scale
-    killer the window was. Deterministic because (ts, turn_idx) is a
-    total order within a conversation.
+    turn, and there is NO window sort of the replicated stream.
+    Deterministic because (ts, turn_idx) is a total order within a
+    conversation. Pairs with no prior turn have no row.
     ``lookback_days`` optionally bounds the replication the same way
     the as-of join does — at 10^12 turns an unbounded lookback
     replicates all history per cutoff, so bound it whenever the
     consumer only needs recent state."""
-    from kkbox_churn_prediction_spark.operators.asof import leak_guard
+    from kkbox_churn_prediction_spark.operators.asof import leak_guard, nearest_turn
 
     cond = leak_guard(turns["ts"], cutoffs["cutoff_ts"], lookback_days)
-    joined = turns.join(F.broadcast(cutoffs), cond, "inner")
-    return joined.groupBy("conv_id", "cutoff_ts").agg(
-        F.expr(f"max_by({value}, struct(ts, turn_idx))").alias(f"last_{value}")
+    latest = nearest_turn(turns, cutoffs, cond, (value,), latest=True)
+    return latest.select(
+        "conv_id", "cutoff_ts", F.col(f"_best._p_{value}").alias(f"last_{value}")
     )
 
 

@@ -10,10 +10,10 @@ horizon. This module generalizes ``operators/labels.py`` to that.
 
 Spark-first shape:
 
-- :func:`survival_labels` rides the same bounded broadcast-cutoff
-  join + min-aggregate as ``entity_labels`` (one shuffle, replication
-  capped by #cutoffs × horizon) and left-joins the entity×cutoff grid
-  so censored entities appear with ``observed = 0``.
+- :func:`survival_labels` takes ``entity_labels``' forward window
+  (``labels.first_qualifying_after``: one shuffle, replication capped
+  by #cutoffs × horizon) and left-joins ``asof.cutoff_grid`` so
+  censored entities appear with ``observed = 0``.
 - :func:`km_curve` is a two-level aggregate: the raw labels collapse
   to ≤``horizon_days`` rows (one per distinct duration) in a single
   partial+final hash agg, and the product-limit recursion
@@ -30,6 +30,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from kkbox_churn_prediction_spark.operators.asof import cutoff_grid
+from kkbox_churn_prediction_spark.operators.labels import first_qualifying_after
+
 _US_PER_DAY = 86_400_000_000.0
 
 
@@ -43,16 +46,8 @@ def survival_labels(
     the first qualifying turn strictly after the cutoff, capped at the
     horizon; ``observed`` = 1 iff the event happened inside the
     horizon (0 = right-censored at ``horizon_days``)."""
-    q = F.expr(qualifying) if isinstance(qualifying, str) else qualifying
-    upper = F.col("cutoff_ts") + F.expr(f"INTERVAL {int(horizon_days)} DAYS")
-    in_horizon = (F.col("ts") > F.col("cutoff_ts")) & (F.col("ts") <= upper)
-    future = (
-        turns.where(q)
-        .join(F.broadcast(cutoffs), in_horizon, "inner")
-        .groupBy("conv_id", "cutoff_ts")
-        .agg(F.min(F.unix_micros(F.col("ts"))).alias("_next_us"))
-    )
-    grid = turns.select("conv_id").distinct().crossJoin(F.broadcast(cutoffs))
+    future = first_qualifying_after(turns, cutoffs, horizon_days, qualifying)
+    grid = cutoff_grid(turns, cutoffs)
     delta_days = F.ceil(
         (F.col("_next_us") - F.unix_micros(F.col("cutoff_ts"))) / F.lit(_US_PER_DAY)
     )
@@ -327,38 +322,23 @@ def competing_risks_labels(
     competing-risks bookkeeping is the fix.
 
     Shape: :func:`survival_labels` doubled — each qualifying stream
-    reduces to a per-(conv, cutoff) MIN under the broadcast cutoff
-    join, one left join each onto the entity grid; no windows.
+    reduces to a per-(conv, cutoff) MIN through
+    ``labels.first_qualifying_after``, one left join each onto the
+    entity grid; no windows.
     """
-    qa = F.expr(qualifying_a) if isinstance(qualifying_a, str) else qualifying_a
-    qb = F.expr(qualifying_b) if isinstance(qualifying_b, str) else qualifying_b
-    upper = F.col("cutoff_ts") + F.expr(f"INTERVAL {int(horizon_days)} DAYS")
-    in_horizon = (F.col("ts") > F.col("cutoff_ts")) & (F.col("ts") <= upper)
-
-    def first_event(q: Column, name: str) -> DataFrame:
-        return (
-            turns.where(q)
-            .join(F.broadcast(cutoffs), in_horizon, "inner")
-            .groupBy("conv_id", "cutoff_ts")
-            .agg(F.min(F.unix_micros(F.col("ts"))).alias(name))
-        )
-    fa = first_event(qa, "_a_us")
-    fb = first_event(qb, "_b_us")
-    grid = turns.select("conv_id").distinct().crossJoin(F.broadcast(cutoffs))
-    j = grid.join(fa, ["conv_id", "cutoff_ts"], "left").join(
-        fb, ["conv_id", "cutoff_ts"], "left"
+    fa = first_qualifying_after(turns, cutoffs, horizon_days, qualifying_a)
+    fb = first_qualifying_after(turns, cutoffs, horizon_days, qualifying_b)
+    j = (
+        cutoff_grid(turns, cutoffs)
+        .join(fa.withColumnRenamed("_next_us", "_a_us"), ["conv_id", "cutoff_ts"], "left")
+        .join(fb.withColumnRenamed("_next_us", "_b_us"), ["conv_id", "cutoff_ts"], "left")
     )
-    win_us = F.when(
-        F.col("_a_us").isNotNull()
-        & (F.col("_b_us").isNull() | (F.col("_a_us") <= F.col("_b_us"))),
-        F.col("_a_us"),
-    ).otherwise(F.col("_b_us"))
+    a_wins = F.col("_a_us").isNotNull() & (
+        F.col("_b_us").isNull() | (F.col("_a_us") <= F.col("_b_us"))
+    )
+    win_us = F.when(a_wins, F.col("_a_us")).otherwise(F.col("_b_us"))
     cause = (
-        F.when(
-            F.col("_a_us").isNotNull()
-            & (F.col("_b_us").isNull() | (F.col("_a_us") <= F.col("_b_us"))),
-            F.lit(1),
-        )
+        F.when(a_wins, F.lit(1))
         .when(F.col("_b_us").isNotNull(), F.lit(2))
         .otherwise(F.lit(0))
     )

@@ -27,7 +27,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from kkbox_churn_prediction_spark.operators.asof import asof_join_broadcast_cutoffs
+from kkbox_churn_prediction_spark.operators.asof import (
+    asof_join_broadcast_cutoffs,
+    cutoff_grid,
+)
 from kkbox_churn_prediction_spark.operators.horizons import (
     DEFAULT_SPECS,
     FeatureSpec,
@@ -36,7 +39,6 @@ from kkbox_churn_prediction_spark.operators.horizons import (
 )
 from kkbox_churn_prediction_spark.sources.events import (
     conversations_from_events,
-    cutoff_grid,
     cutoffs_from_events,
 )
 
@@ -47,18 +49,18 @@ def backfill_features(
     horizons_days: tuple[int, ...] = (1, 3, 7),
     specs: tuple[FeatureSpec, ...] = DEFAULT_SPECS,
     *,
-    inclusive: bool = False,
     lookback_days=None,
     full_window: bool = False,
 ) -> DataFrame:
     """Compute the entity×cutoff feature matrix.
 
     Leak-safe by construction: every turn reaching an aggregate passed
-    the as-of range predicate (strictly-prior by default). The
-    superset window is max(horizons) unless ``lookback_days``
-    overrides it — pass a Column carried on ``cutoffs`` for PER-FOLD
-    lookbacks (expanding CV policy, see ``plans.folds``), with
-    ``full_window=True`` to also emit whole-window aggregates.
+    the strictly-prior as-of range predicate. ``cutoffs`` holds one
+    row per cutoff. The superset window is max(horizons) unless
+    ``lookback_days`` overrides it — pass a Column carried on
+    ``cutoffs`` for PER-FOLD lookbacks (expanding CV policy, see
+    ``plans.folds``), with ``full_window=True`` to also emit
+    whole-window aggregates.
     Sub-horizons are conditional aggregates (single pass, see
     ``operators.horizons``).
     """
@@ -78,19 +80,13 @@ def backfill_features(
         F.expr("CASE WHEN role = 'user' THEN 1 END").alias("is_user"),
         "tool",
     )
-    joined = asof_join_broadcast_cutoffs(
-        narrow, cutoffs, lookback_days=max_h, inclusive=inclusive
-    )
+    joined = asof_join_broadcast_cutoffs(narrow, cutoffs, lookback_days=max_h)
     feats = multi_horizon_aggregate(
         joined, horizons_days, specs, full_window=full_window
     )
-    # grid wants bare cutoff timestamps; only de-dup when extra fold
-    # metadata (e.g. lookback_days) rides on the cutoff frame — the
-    # common path keeps the round-1 plan (no extra distinct stage)
-    grid_cutoffs = cutoffs
-    if set(cutoffs.columns) != {"cutoff_ts"}:
-        grid_cutoffs = cutoffs.select("cutoff_ts").distinct()
-    grid = cutoff_grid(conversations.select("conv_id"), grid_cutoffs)
+    # the grid wants bare cutoff timestamps: drop fold metadata (e.g.
+    # the expanding policy's lookback_days) that rides on the cutoffs
+    grid = cutoff_grid(conversations, cutoffs.select("cutoff_ts"))
     return attach_grid_defaults(feats, grid, specs, horizons_days)
 
 

@@ -1,6 +1,5 @@
 from kkbox_churn_prediction_spark.sources.events import (  # noqa: F401
     conversations_from_events,
-    cutoff_grid,
     cutoffs_from_events,
     read_table,
 )

@@ -109,18 +109,6 @@ def cutoffs_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def cutoff_grid(conversations: DataFrame, cutoffs: DataFrame) -> DataFrame:
-    """Entity × cutoff grid — the reference's ``label_index``
-    (``features/features_comprehensive.sql:12-19``).
-
-    The cutoff list is tiny (a handful of fold boundaries) so the
-    cross join broadcasts it; the grid inherits the entity side's
-    partitioning.
-    """
-    entities = conversations.select("conv_id").distinct()
-    return entities.crossJoin(F.broadcast(cutoffs))
-
-
 def read_with_schema_defaults(
     spark: SparkSession, path: str, schema: "StructType"
 ) -> DataFrame:

@@ -9,16 +9,31 @@ values) and window-boundary tests
 
 from __future__ import annotations
 
+from datetime import datetime
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from kkbox_churn_prediction_spark.operators.asof import (
+    asof_backward_nearest,
+    asof_forward_nearest,
     asof_join_broadcast_cutoffs,
     asof_join_entity_cutoffs,
+    cutoff_grid,
+)
+from kkbox_churn_prediction_spark.operators.decay import decayed_counts
+from kkbox_churn_prediction_spark.operators.labels import entity_labels
+from kkbox_churn_prediction_spark.operators.survival import (
+    competing_risks_labels,
+    survival_labels,
 )
 from kkbox_churn_prediction_spark.plans.backfill import backfill_features
-from kkbox_churn_prediction_spark.sources.synth import leak_trap_fixture, to_spark
+from kkbox_churn_prediction_spark.sources.synth import (
+    RAW_TRANSCRIPT_SCHEMA,
+    leak_trap_fixture,
+    to_spark,
+)
 
 
 @pytest.fixture(scope="module")
@@ -69,7 +84,7 @@ def test_inclusive_boundary_variant(trap):
 
 def test_entity_grid_variant_matches_broadcast(trap, spark):
     turns, cutoffs, _ = trap
-    grid = turns.select("conv_id").distinct().crossJoin(cutoffs)
+    grid = cutoff_grid(turns, cutoffs)
     a = asof_join_broadcast_cutoffs(turns, cutoffs, 7).select("conv_id", "turn_idx", "cutoff_ts")
     b = asof_join_entity_cutoffs(turns, grid, 7).select("conv_id", "turn_idx", "cutoff_ts")
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
@@ -181,3 +196,98 @@ def test_asof_backward_nearest_ttl_and_tiebreak(spark):
         ).collect()
     }
     assert unb["b"]["found"] and unb["b"]["staleness_us"] == 30 * 24 * 3600 * 1_000_000
+
+
+# (operator, documented default row, whether the default also covers a
+# conversation whose turns never match the qualifying predicate)
+GRID_FAMILY = [
+    pytest.param(
+        backfill_features,
+        {"turn_cnt_7d": 0, "text_len_sum_7d": 0, "text_len_avg_7d": 0.0,
+         "micros_since_last_turn": -1},
+        False,
+        id="backfill_features",
+    ),
+    pytest.param(
+        lambda t, c: entity_labels(t, c, 3),
+        {"is_churn": 1, "micros_to_next_qualifying": -1},
+        True,
+        id="entity_labels",
+    ),
+    pytest.param(
+        lambda t, c: survival_labels(t, c, 14),
+        {"duration_days": 14, "observed": 0},
+        True,
+        id="survival_labels",
+    ),
+    pytest.param(
+        lambda t, c: competing_risks_labels(t, c, 14),
+        {"duration_days": 14, "cause": 0},
+        True,
+        id="competing_risks_labels",
+    ),
+    pytest.param(
+        decayed_counts,
+        {"decayed_turns_hl1d": 0.0, "decayed_turns_hl7d": 0.0,
+         "decayed_tool_hl1d": 0.0, "decayed_tool_hl7d": 0.0},
+        False,
+        id="decayed_counts",
+    ),
+    pytest.param(
+        lambda t, c: asof_forward_nearest(t, c, 7),
+        {"found": False, "next_ts_us": None, "gap_us": None, "next_role": None},
+        False,
+        id="asof_forward_nearest",
+    ),
+    pytest.param(
+        lambda t, c: asof_backward_nearest(t, c, 14),
+        {"found": False, "last_ts_us": None, "staleness_us": None, "last_role": None},
+        False,
+        id="asof_backward_nearest",
+    ),
+]
+
+
+@pytest.fixture(scope="module")
+def grid_turns(spark):
+    rows = [
+        # active: user turns and a tool error on both sides of both cutoffs
+        ("active", 0, "user", "hi", None, datetime(2024, 1, 14, 9)),
+        ("active", 1, "assistant", "ok", "error", datetime(2024, 1, 16, 9)),
+        ("active", 2, "user", "more", None, datetime(2024, 1, 21, 9)),
+        ("active", 3, "user", "again", None, datetime(2024, 1, 23, 9)),
+        # silent: its one turn is older than every lookback window and
+        # nothing follows it, so no window of any operator holds a turn
+        ("silent", 0, "user", "old", None, datetime(2023, 1, 1)),
+        # nonqual: turns inside every window, none a user turn or an error
+        ("nonqual", 0, "assistant", "x", None, datetime(2024, 1, 14)),
+        ("nonqual", 1, "system", "y", "search", datetime(2024, 1, 16)),
+        ("nonqual", 2, "assistant", "z", None, datetime(2024, 1, 21)),
+        ("nonqual", 3, "assistant", "w", None, datetime(2024, 1, 23)),
+    ]
+    turns = spark.createDataFrame(rows, RAW_TRANSCRIPT_SCHEMA)
+    cuts = [datetime(2024, 1, 15), datetime(2024, 1, 22)]
+    cutoffs = spark.createDataFrame([(c,) for c in cuts], "cutoff_ts timestamp")
+    return turns, cutoffs, cuts
+
+
+@pytest.mark.parametrize("build,default,qualified", GRID_FAMILY)
+def test_grid_complete_with_default_rows(grid_turns, build, default, qualified):
+    """Every as-of operator emits exactly distinct conv_id × cutoffs
+    rows, and a conversation with nothing in its window (or, for the
+    label builders, nothing that qualifies) gets the documented
+    default row."""
+    turns, cutoffs, cuts = grid_turns
+    rows = [r.asDict() for r in build(turns, cutoffs).collect()]
+    keys = [(r["conv_id"], r["cutoff_ts"]) for r in rows]
+    assert sorted(keys) == sorted(
+        (c, t) for c in ("active", "silent", "nonqual") for t in cuts
+    )
+    is_default: dict[str, list[bool]] = {}
+    for r in rows:
+        is_default.setdefault(r["conv_id"], []).append(
+            all(r[k] == v for k, v in default.items())
+        )
+    assert is_default["silent"] == [True, True]
+    assert is_default["nonqual"] == [qualified, qualified]
+    assert not all(is_default["active"])

@@ -215,6 +215,19 @@ class TestProportionZ:
         r = two_proportion_z(df).collect()[0]
         assert r["z_stat"] == 0.0 and r["rate_diff"] == 0.0
 
+    def test_single_arm_yields_null_rate_and_zero_z(self, spark):
+        from kkbox_churn_prediction_spark.operators.abtest import two_proportion_z
+
+        # arm b is empty: its rate is undefined (DuckDB's x/0.0 is NULL)
+        # and the z guard must not divide by n_b = 0
+        rows = [("a", 1), ("a", 0), ("a", 1)]
+        df = spark.createDataFrame(rows, "arm string, success int")
+        r = two_proportion_z(df).collect()[0]
+        assert (r["n_a"], r["n_b"], r["s_a"], r["s_b"]) == (3, 0, 2, 0)
+        assert r["rate_a"] == round(2 / 3, 6)
+        assert r["rate_b"] is None and r["rate_diff"] is None
+        assert r["z_stat"] == 0.0
+
 
 class TestSrm:
     def test_balanced_split_not_flagged(self, spark):

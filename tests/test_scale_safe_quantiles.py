@@ -170,8 +170,8 @@ def test_hot_shingle_cap_bounds_pair_join(hot_shingle_docs):
 
 
 def test_last_value_before_cutoff_plans_hash_agg(spark):
-    """VERDICT #5: the max_by rewrite must plan as a hash aggregate
-    (map-side partials), not sort+window."""
+    """VERDICT #5: the struct-max pick must plan as a partial+final
+    aggregate (map-side partials), not sort+window."""
     from datetime import datetime
 
     from kkbox_churn_prediction_spark.operators.relational import (
@@ -194,7 +194,7 @@ def test_last_value_before_cutoff_plans_hash_agg(spark):
     out = last_value_before_cutoff(turns, cutoffs, "role")
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan
-    # struct-ordered max_by plans SortAggregate (struct buffers aren't
+    # a max over a struct plans SortAggregate (struct buffers aren't
     # hash-aggregable) — what matters at scale is that it's a
     # partial+final AGGREGATE (map-side combine collapses replicated
     # rows before the shuffle), not a window sort of the full stream
