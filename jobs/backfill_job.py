@@ -7,7 +7,7 @@ Ships per the north rule via::
         jobs/backfill_job.py \
         --input /path/to/transcripts_parquet \
         --output /path/to/features_out \
-        --horizons 1,3,7 --run-id r1 --buckets 8 [--resume]
+        --horizons 1,3,7 --run-id r1 --buckets 8
 
 On a cluster the same invocation takes ``--master yarn``/k8s etc.;
 the job itself is cluster-agnostic (no local paths baked in). Cutoffs
@@ -15,8 +15,9 @@ default to data-derived weekly boundaries; pass ``--cutoffs
 2024-01-08,2024-01-15`` for explicit fold cutoffs (the reference's
 ``cutoff_YYYY-MM`` windows, ``src/backtest.py:290-293``).
 
-The run is checkpointed through ``plans.manifest`` (bucket-granular,
-idempotent resume) and finishes with the leakage assert-zero gate.
+The run is checkpointed through ``plans.manifest`` (bucket-granular; a
+rerun with the same ``--run-id`` resumes) and finishes with the
+leakage assert-zero gate.
 """
 
 from __future__ import annotations
@@ -36,7 +37,6 @@ def main(argv: list[str] | None = None) -> None:
     p.add_argument("--cutoffs", default=None, help="explicit cutoff timestamps, comma-sep")
     p.add_argument("--run-id", default="run0")
     p.add_argument("--buckets", type=int, default=8)
-    p.add_argument("--resume", action="store_true", help="skip completed buckets")
     args = p.parse_args(argv)
 
     from pyspark.sql import SparkSession
@@ -65,24 +65,15 @@ def main(argv: list[str] | None = None) -> None:
     else:
         cutoffs = weekly_cutoffs(turns)
 
-    if not args.resume:
-        # fresh runs clear nothing — the manifest keys on run_id
-        pass
-
-    # content snapshot of the input: a resume against CHANGED input is
-    # refused (plans/manifest.py) instead of silently mixing buckets
-    try:
-        fp = fingerprint_parquet_dir(args.input)
-    except OSError:
-        fp = None  # e.g. non-local input path; Iceberg snapshot id instead
-
     stats = resumable_backfill(
         spark,
         lambda s: backfill_features(turns, cutoffs, horizons),
         args.output,
         run_id=args.run_id,
         n_buckets=args.buckets,
-        input_fingerprint=fp,
+        # a resume against CHANGED local input is refused instead of
+        # silently mixing buckets (None for a non-local input)
+        input_fingerprint=fingerprint_parquet_dir(args.input),
         params={"horizons": list(horizons), "cutoffs": args.cutoffs},
     )
     # post-job invariant gates (reference pattern src/make_dataset.py:140-194)

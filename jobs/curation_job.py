@@ -8,7 +8,7 @@ Ships like the feature backfill::
         --input /path/to/documents_parquet \
         --output /path/to/curated_out \
         --keep-lang en --min-quality 0.666667 \
-        --run-id c1 --buckets 8 [--resume]
+        --run-id c1 --buckets 8
 
 The per-document verdict table writes bucket-by-bucket through the
 same checkpoint manifest as the backfill (run header with input
@@ -35,7 +35,6 @@ def main(argv: list[str] | None = None) -> dict:
     p.add_argument("--min-quality", type=float, default=0.666667)
     p.add_argument("--run-id", default="c0")
     p.add_argument("--buckets", type=int, default=8)
-    p.add_argument("--resume", action="store_true", help="skip completed buckets")
     args = p.parse_args(argv)
 
     from pyspark.sql import SparkSession
@@ -52,11 +51,6 @@ def main(argv: list[str] | None = None) -> dict:
     spark = SparkSession.builder.appName("corpus-curation").getOrCreate()
     docs = spark.read.parquet(args.input)
 
-    try:
-        fp = fingerprint_parquet_dir(args.input)
-    except OSError:
-        fp = None  # non-local input; pass the table snapshot id instead
-
     stats = resumable_backfill(
         spark,
         lambda s: curate_corpus(
@@ -65,7 +59,7 @@ def main(argv: list[str] | None = None) -> dict:
         args.output,
         run_id=args.run_id,
         n_buckets=args.buckets,
-        input_fingerprint=fp,
+        input_fingerprint=fingerprint_parquet_dir(args.input),
         params={"keep_lang": args.keep_lang, "min_quality": args.min_quality},
         bucket_col="doc_id",
     )

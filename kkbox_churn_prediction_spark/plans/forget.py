@@ -4,42 +4,51 @@ A 100 TB transcript store gets deletion requests (consent revocation,
 right-to-be-forgotten). Rewriting the whole table per request is a
 non-starter; this utility rewrites ONLY the buckets that can contain
 the target ids — the layout written by ``plans/manifest.py`` keys
-buckets on ``pmod(hash(id), n)``, so the affected bucket set comes
-from hashing the (tiny) id list with the SAME Spark hash, and every
-other bucket's files are untouched (their row counts and mtimes stay
-valid). Each rewritten bucket anti-joins the broadcast id list and
-recommits its new row count to the manifest, so lineage keeps
-matching the data after deletions.
+buckets on ``manifest.bucket_of`` (``pmod(hash(id), n)`` over the
+stored id type), so the affected bucket set comes from hashing the
+(tiny) id list, cast to the layout's id type, with the SAME
+expression, and every other bucket's files are untouched (their row
+counts and mtimes stay valid). Each rewritten bucket anti-joins the
+broadcast id list and recommits its new row count to the manifest,
+so lineage keeps matching the data after deletions.
 
-Write discipline: new data lands in ``bucket=K.tmp`` first, then the
-old dir drops and the tmp renames — crash between those steps leaves
-either the old bucket (retry-safe) or a tmp to clean up, never a
-half-written live bucket. On an object store, swap the rename for the
-table format's atomic commit (Iceberg delete-files do this natively
-when the runtime has the jar — ``sources/io.py``).
+Rewritten buckets go through the one commit protocol
+(``plans.manifest.publish``): staged under ``_staging/``, counted,
+swapped in, recorded — a crash before the swap leaves the old bucket
+live and readers never see the staged copy. On an object store, swap
+the rename for the table format's atomic commit (Iceberg
+delete-files do this natively when the runtime has the jar —
+``sources/io.py``).
 """
 
 from __future__ import annotations
 
-import shutil
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kkbox_churn_prediction_spark.plans.manifest import ManifestStore
+from kkbox_churn_prediction_spark.plans.manifest import bucket_of, open_run, write_partition
+
+
+def _ids_frame(spark: SparkSession, ids: list, col: str, id_type: str) -> DataFrame:
+    return spark.createDataFrame([(str(i),) for i in ids], f"{col} string").select(
+        F.col(col).cast(id_type).alias(col)
+    )
 
 
 def buckets_for_ids(
-    spark: SparkSession, ids: list[str], n_buckets: int
-) -> dict[int, list[str]]:
-    """bucket → ids mapping using Spark's own hash (must match the
-    writer's ``pmod(F.hash(id), n)`` — never re-implement the hash
-    driver-side)."""
-    df = spark.createDataFrame([(i,) for i in ids], "id string").select(
-        "id", F.pmod(F.hash(F.col("id")), F.lit(int(n_buckets))).alias("b")
+    spark: SparkSession, ids: list, n_buckets: int, id_type: str = "string"
+) -> dict[int, list]:
+    """bucket → ids mapping using the writer's own
+    :func:`~kkbox_churn_prediction_spark.plans.manifest.bucket_of`
+    (never re-implement the hash driver-side). ``id_type`` is the
+    layout's id column type: Spark's hash differs across types, so
+    the ids are cast to it first."""
+    df = _ids_frame(spark, ids, "id", id_type).select(
+        "id", bucket_of("id", n_buckets).alias("b")
     )
-    out: dict[int, list[str]] = {}
+    out: dict[int, list] = {}
     for r in df.collect():
         out.setdefault(int(r["b"]), []).append(r["id"])
     return out
@@ -48,7 +57,7 @@ def buckets_for_ids(
 def forget_entities(
     spark: SparkSession,
     data_dir: str,
-    ids: list[str],
+    ids: list,
     *,
     n_buckets: int,
     run_id: str,
@@ -58,28 +67,22 @@ def forget_entities(
     rewriting only affected buckets; returns
     {"buckets_rewritten": int, "rows_deleted": int}."""
     out = Path(data_dir)
-    manifest = ManifestStore(out / "_manifest.jsonl")
-    affected = buckets_for_ids(spark, ids, n_buckets)
-    manifest.write_header(
-        run_id, None, params={"op": "forget", "n_ids": len(ids)}, seed=None
-    )
-    ids_df = spark.createDataFrame([(i,) for i in ids], f"{id_col} string")
+    manifest, _ = open_run(out, run_id, params={"op": "forget", "n_ids": len(ids)})
     rewritten = deleted = 0
-    for b, _bucket_ids in sorted(affected.items()):
+    if not any(out.glob("bucket=*")):
+        return {"buckets_rewritten": rewritten, "rows_deleted": deleted}
+    id_type = (
+        spark.read.parquet(str(out / "bucket=*")).schema[id_col].dataType.simpleString()
+    )
+    ids_df = _ids_frame(spark, ids, id_col, id_type)
+    for b in sorted(buckets_for_ids(spark, ids, n_buckets, id_type)):
         bucket_dir = out / f"bucket={b}"
         if not bucket_dir.exists():
             continue
         cur = spark.read.parquet(str(bucket_dir))
         before = cur.count()
         kept = cur.join(F.broadcast(ids_df), id_col, "left_anti")
-        tmp = out / f"bucket={b}.tmp"
-        if tmp.exists():
-            shutil.rmtree(tmp)
-        kept.write.mode("overwrite").parquet(str(tmp))
-        after = spark.read.parquet(str(tmp)).count()
-        shutil.rmtree(bucket_dir)
-        tmp.rename(bucket_dir)
-        manifest.commit(run_id, b, after)
+        after = write_partition(kept, manifest, run_id, b, bucket_dir)
         rewritten += 1
         deleted += before - after
     return {"buckets_rewritten": rewritten, "rows_deleted": deleted}
@@ -95,40 +98,29 @@ def compact_buckets(
 ) -> dict:
     """Small-file compaction: rewrite any bucket whose parquet file
     count exceeds ``min_files`` down to ``target_files_per_bucket``
-    files (coalesce — no shuffle, a pure file-merge read+write), with
-    the same tmp-rename swap and manifest recommit as deletion.
+    files (coalesce — no shuffle, a pure file-merge read+write),
+    committed like deletion, with the staged row count checked
+    against the live bucket's before the swap.
     Incremental writers (the streaming sink, repeated small
     backfills) accrete files that degrade scan planning at 100 TB;
     compaction restores the layout without touching row content.
     Returns {"buckets_compacted": int}.
     """
     out = Path(data_dir)
-    manifest = ManifestStore(out / "_manifest.jsonl")
-    manifest.write_header(run_id, None, params={"op": "compact"}, seed=None)
+    manifest, _ = open_run(out, run_id, params={"op": "compact"})
     compacted = 0
     for bucket_dir in sorted(out.glob("bucket=*")):
-        if bucket_dir.suffix == ".tmp":
-            continue
         n_files = len(list(bucket_dir.glob("*.parquet")))
         if n_files <= max(int(min_files) - 1, int(target_files_per_bucket)):
             continue
         cur = spark.read.parquet(str(bucket_dir))
-        before = cur.count()
-        tmp = Path(str(bucket_dir) + ".tmp")
-        if tmp.exists():
-            shutil.rmtree(tmp)
-        cur.coalesce(int(target_files_per_bucket)).write.mode("overwrite").parquet(
-            str(tmp)
+        write_partition(
+            cur.coalesce(int(target_files_per_bucket)),
+            manifest,
+            run_id,
+            int(bucket_dir.name.split("=")[1]),
+            bucket_dir,
+            expect_rows=cur.count(),
         )
-        after = spark.read.parquet(str(tmp)).count()
-        if after != before:  # pragma: no cover - safety net
-            shutil.rmtree(tmp)
-            raise RuntimeError(
-                f"compaction row-count mismatch in {bucket_dir}: {before} -> {after}"
-            )
-        shutil.rmtree(bucket_dir)
-        tmp.rename(bucket_dir)
-        b = int(bucket_dir.name.split("=")[1])
-        manifest.commit(run_id, b, after)
         compacted += 1
     return {"buckets_compacted": compacted}

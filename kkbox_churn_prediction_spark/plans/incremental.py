@@ -8,11 +8,13 @@ the checkpoint manifest by CUTOFF (ISO timestamp string) instead of
 hash bucket, diffs the data-derived cutoff set against the committed
 set, and runs the flagship backfill restricted to the new cutoffs —
 reusing the exact same leak-safe plan, just with a smaller broadcast
-cutoff list. Output lands as ``cutoff=<iso>/`` partitions, so
-downstream readers partition-prune by fold and a re-run after a
-crash re-computes only uncommitted cutoffs (same idempotence
-discipline as ``resumable_backfill``; completed cutoffs' files are
-never touched, which also keeps their manifest lineage valid).
+cutoff list. Output lands as ``data/cutoff_key=<key>/`` partitions,
+so downstream readers partition-prune by fold. All new cutoffs are
+written by ONE ``partitionBy`` job into staging, then each partition
+is swapped in and committed through ``plans.manifest.publish`` (the
+one commit protocol): a re-run after a crash re-computes only
+uncommitted cutoffs, and completed cutoffs' files are never touched,
+which also keeps their manifest lineage valid.
 
 Late-arriving turns for an ALREADY-COMMITTED cutoff do not silently
 mutate it — exactly the batch leak-guard's contract (a cutoff's
@@ -22,14 +24,13 @@ cutoff deliberately by clearing its manifest row / output dir.
 
 from __future__ import annotations
 
-import shutil
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kkbox_churn_prediction_spark.plans.backfill import backfill_features
-from kkbox_churn_prediction_spark.plans.manifest import ManifestStore
+from kkbox_churn_prediction_spark.plans.manifest import STAGING, open_run, publish
 
 
 def incremental_backfill(
@@ -44,12 +45,7 @@ def incremental_backfill(
     """Run the flagship backfill for every cutoff in ``cutoffs`` not
     yet committed to the manifest; returns
     {"cutoffs_run": int, "cutoffs_skipped": int, "rows": int}."""
-    out = Path(out_dir)
-    out.mkdir(parents=True, exist_ok=True)
-    manifest = ManifestStore(out / "_manifest.jsonl")
-    if manifest.run_header(run_id) is None:
-        manifest.write_header(run_id, None, params={"op": "incremental"}, seed=None)
-    done = manifest.done_keys(run_id)
+    manifest, done = open_run(out_dir, run_id, params={"op": "incremental"})
 
     all_cutoffs = [
         r["cutoff_ts"] for r in cutoffs.select("cutoff_ts").distinct().collect()
@@ -71,20 +67,13 @@ def incremental_backfill(
     ).withColumn(
         "cutoff_key", F.date_format("cutoff_ts", "yyyyMMdd'T'HHmmss")
     )
-    # ONE job writes all new cutoffs as partitions (dynamic overwrite
-    # touches only them — committed cutoffs' files stay untouched);
-    # commits land per cutoff after the write, so a crash mid-write
-    # re-runs only this batch of new cutoffs, never the history
-    (
-        feats.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cutoff_key")
-        .parquet(str(out / "data"))
-    )
+    data = Path(out_dir) / "data"
+    # ONE job stages all new cutoffs as partitions; each is then
+    # swapped in and committed on its own, so committed cutoffs' files
+    # stay untouched and a crash re-runs only uncommitted cutoffs
+    feats.write.mode("overwrite").partitionBy("cutoff_key").parquet(str(data / STAGING))
     rows = 0
     for c in new:
         k = key(c)
-        n = spark.read.parquet(str(out / "data" / f"cutoff_key={k}")).count()
-        manifest.commit(run_id, k, n)
-        rows += n
+        rows += publish(spark, manifest, run_id, k, data / f"cutoff_key={k}")
     return {"cutoffs_run": len(new), "cutoffs_skipped": skipped, "rows": rows}

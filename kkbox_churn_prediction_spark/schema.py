@@ -32,17 +32,3 @@ CUTOFF_GRID_SCHEMA = T.StructType(
         T.StructField("cutoff_ts", T.TimestampType(), False),
     ]
 )
-
-# checkpoint manifest row — extends the reference's run manifest
-# (src/runlog.py:17-26) to per-partition granularity for resumable
-# backfills (north_rule).
-MANIFEST_SCHEMA = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("partition_key", T.StringType(), False),
-        T.StructField("row_count", T.LongType(), False),
-        T.StructField("input_fingerprint", T.LongType(), True),
-        T.StructField("status", T.StringType(), False),
-        T.StructField("completed_at", T.TimestampType(), True),
-    ]
-)

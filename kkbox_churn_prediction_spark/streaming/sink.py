@@ -4,29 +4,29 @@ Structured Streaming's foreachBatch gives at-least-once delivery:
 after a crash between "sink wrote" and "checkpoint advanced", the
 SAME batch id replays. Spark's own file sink handles this with its
 log; this sink routes the idempotence through the SAME checkpoint
-manifest the batch backfill uses (``plans/manifest.py``), so one
-audit trail covers both ingestion modes — the lambda-architecture
+manifest and commit protocol the batch backfill uses
+(``plans.manifest.write_partition``: stage, count, swap, record), so
+one audit trail covers both ingestion modes — the lambda-architecture
 discipline: a replayed batch id is detected as already-committed and
-skipped, partial orphan output from a mid-write crash is overwritten,
-and per-batch row counts land as lineage rows next to the backfill's
-bucket commits.
+skipped, a crash mid-write leaves only a hidden staged copy that the
+replay replaces, and per-batch row counts land as lineage rows next
+to the backfill's bucket commits.
 """
 
 from __future__ import annotations
 
-import shutil
 from pathlib import Path
 
 from pyspark.sql import DataFrame
 
-from kkbox_churn_prediction_spark.plans.manifest import ManifestStore
+from kkbox_churn_prediction_spark.plans.manifest import open_run, write_partition
 
 
 def manifest_foreach_batch(out_dir: str, run_id: str):
-    """Build the ``foreachBatch`` function: each micro-batch writes
-    ``batch=<id>/`` parquet then commits (run_id, batch_id, rows) to
+    """Build the ``foreachBatch`` function: each micro-batch publishes
+    ``batch=<id>/`` parquet and commits (run_id, batch_id, rows) to
     the manifest; an id already committed SKIPS (idempotent replay),
-    an uncommitted partial dir is overwritten (crash mid-write).
+    an uncommitted dir is replaced (crash mid-write).
 
     Use::
 
@@ -35,19 +35,13 @@ def manifest_foreach_batch(out_dir: str, run_id: str):
                .option("checkpointLocation", ckpt).start())
     """
     out = Path(out_dir)
-    out.mkdir(parents=True, exist_ok=True)
-    manifest = ManifestStore(out / "_manifest.jsonl")
-    if manifest.run_header(run_id) is None:
-        manifest.write_header(run_id, None, params={"sink": "streaming"}, seed=None)
+    manifest, done = open_run(out, run_id, params={"sink": "streaming"})
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
-        if int(batch_id) in manifest.done_buckets(run_id):
+        key = str(int(batch_id))
+        if key in done:
             return  # replayed batch — already committed, exactly-once
-        batch_dir = out / f"batch={int(batch_id)}"
-        if batch_dir.exists():
-            shutil.rmtree(batch_dir)  # orphan partial from a crash
-        batch_df.write.mode("overwrite").parquet(str(batch_dir))
-        n = batch_df.sparkSession.read.parquet(str(batch_dir)).count()
-        manifest.commit(run_id, int(batch_id), n)
+        write_partition(batch_df, manifest, run_id, key, out / f"batch={key}")
+        done.add(key)
 
     return fn

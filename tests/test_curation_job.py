@@ -37,7 +37,7 @@ def test_curation_job_runs_and_resumes(spark, tmp_path, monkeypatch):
     assert got.where(F.col("verdict") != "kept").count() == 0
     # resume: all buckets skip, nothing recomputed
     st2 = job.main(
-        ["--input", src, "--output", out, "--run-id", "cj", "--buckets", "4", "--resume"]
+        ["--input", src, "--output", out, "--run-id", "cj", "--buckets", "4"]
     )
     assert st2["buckets_skipped"] == 4 and st2["buckets_run"] == 0
     # the manifest carries the run header with the input fingerprint

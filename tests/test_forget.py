@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -67,3 +68,74 @@ def test_compaction_merges_files_preserving_rows(spark, tmp_path):
     assert st["buckets_compacted"] >= 1
     assert len(glob.glob(f"{out}/bucket=0/*.parquet")) == 1
     assert spark.read.parquet(f"{out}/bucket=*").count() == rows_before
+
+
+def test_forget_bigint_id_layout(spark, tmp_path):
+    """The deleter must hash ids in the layout's own id type: a bigint
+    ``doc_id`` hashed as a string lands in other buckets."""
+    from kkbox_churn_prediction_spark.plans.forget import forget_entities
+    from kkbox_churn_prediction_spark.plans.manifest import resumable_backfill
+
+    out = f"{tmp_path}/data"
+    df = spark.range(200).select(
+        F.col("id").alias("doc_id"), (F.col("id") * 3).alias("feature")
+    )
+    resumable_backfill(
+        spark, lambda s: df, out, run_id="base", n_buckets=8, bucket_col="doc_id"
+    )
+    targets = [str(i) for i in range(0, 200, 10)]
+    holders = {
+        b
+        for b in range(8)
+        if spark.read.parquet(f"{out}/bucket={b}")
+        .where(F.col("doc_id").isin([int(t) for t in targets]))
+        .count()
+    }
+    mtimes_before = {b: os.path.getmtime(f"{out}/bucket={b}") for b in range(8)}
+    st = forget_entities(
+        spark, out, targets, n_buckets=8, run_id="f1", id_col="doc_id"
+    )
+    assert st["rows_deleted"] == 20
+    assert st["buckets_rewritten"] == len(holders)
+    got = spark.read.parquet(f"{out}/bucket=*")
+    assert got.count() == 180
+    assert got.where(F.col("doc_id") % 10 == 0).count() == 0
+    for b in range(8):
+        changed = os.path.getmtime(f"{out}/bucket={b}") != mtimes_before[b]
+        assert changed == (b in holders)
+
+
+def test_forget_crash_before_swap_is_invisible(spark, tmp_path, monkeypatch):
+    """A forget killed after staging a rewritten bucket but before
+    swapping it in leaves readers on exactly the old rows (no staged
+    copy is read twice), and a rerun completes the deletion."""
+    import shutil
+    from pathlib import Path
+
+    from kkbox_churn_prediction_spark.plans.forget import forget_entities
+    from kkbox_churn_prediction_spark.plans.manifest import read_backfill_output
+
+    out = f"{tmp_path}/data"
+    _layout(spark, out)
+    targets = ["c5", "c17", "c99"]
+    before = sorted(map(tuple, read_backfill_output(spark, out).collect()))
+
+    real_rmtree = shutil.rmtree
+
+    def killed_at_swap(path, *args, **kwargs):
+        p = Path(path)
+        if p.parent == Path(out) and p.name.startswith("bucket="):
+            raise RuntimeError("killed before swap")
+        return real_rmtree(path, *args, **kwargs)
+
+    with monkeypatch.context() as m, pytest.raises(RuntimeError, match="killed before swap"):
+        m.setattr(shutil, "rmtree", killed_at_swap)
+        forget_entities(spark, out, targets, n_buckets=8, run_id="f1")
+    assert sorted(map(tuple, read_backfill_output(spark, out).collect())) == before
+
+    st = forget_entities(spark, out, targets, n_buckets=8, run_id="f1")
+    assert st["rows_deleted"] == 3
+    got = read_backfill_output(spark, out)
+    assert got.count() == 197
+    assert got.where(F.col("conv_id").isin(targets)).count() == 0
+    assert not os.path.exists(f"{out}/_staging")

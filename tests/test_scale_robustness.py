@@ -65,7 +65,23 @@ def test_salted_two_phase_sum_matches_plain(spark, turns):
     assert got == want
 
 
-def test_resumable_backfill_kill_restart(spark, turns, tmp_path):
+def _crash_after_commits(monkeypatch, n):
+    """Kill the writer right after its ``n``-th partition commit."""
+    from kkbox_churn_prediction_spark.plans.manifest import ManifestStore
+
+    real = ManifestStore.commit
+    calls = []
+
+    def commit(self, *args, **kwargs):
+        real(self, *args, **kwargs)
+        calls.append(1)
+        if len(calls) >= n:
+            raise RuntimeError(f"injected failure after {len(calls)} buckets")
+
+    monkeypatch.setattr(ManifestStore, "commit", commit)
+
+
+def test_resumable_backfill_kill_restart(spark, turns, tmp_path, monkeypatch):
     """Kill after 2 buckets → resume → output identical to one-shot
     (north_rule: 'resumable from checkpoint ... idempotently')."""
     from kkbox_churn_prediction_spark.plans.backfill import backfill_features
@@ -80,8 +96,9 @@ def test_resumable_backfill_kill_restart(spark, turns, tmp_path):
     oneshot = backfill_features(turns, cutoffs).orderBy("conv_id", "cutoff_ts").toPandas()
 
     out = str(tmp_path / "ckpt")
-    with pytest.raises(RuntimeError, match="injected failure"):
-        resumable_backfill(spark, build, out, run_id="r1", n_buckets=4, fail_after=2)
+    with monkeypatch.context() as m, pytest.raises(RuntimeError, match="injected failure"):
+        _crash_after_commits(m, 2)
+        resumable_backfill(spark, build, out, run_id="r1", n_buckets=4)
     st = resumable_backfill(spark, build, out, run_id="r1", n_buckets=4)
     assert st["buckets_skipped"] == 2 and st["buckets_run"] == 2
 
@@ -99,7 +116,7 @@ def test_resumable_backfill_kill_restart(spark, turns, tmp_path):
     assert st2["buckets_run"] == 0 and st2["buckets_skipped"] == 4
 
 
-def test_resume_refuses_changed_input_fingerprint(spark, turns, tmp_path):
+def test_resume_refuses_changed_input_fingerprint(spark, turns, tmp_path, monkeypatch):
     """VERDICT #7: a resume against CHANGED input must not mix old
     done-buckets with new-input buckets — it refuses outright."""
     from kkbox_churn_prediction_spark.plans.backfill import backfill_features
@@ -113,16 +130,16 @@ def test_resume_refuses_changed_input_fingerprint(spark, turns, tmp_path):
         return backfill_features(turns, cutoffs)
 
     out = str(tmp_path / "ckpt_fp")
-    with pytest.raises(RuntimeError, match="injected failure"):
+    with monkeypatch.context() as m, pytest.raises(RuntimeError, match="injected failure"):
+        _crash_after_commits(m, 1)
         resumable_backfill(
-            spark, build, out, run_id="r2", n_buckets=4, fail_after=1,
-            input_fingerprint="fp_a", params={"horizons": [1, 3, 7]}, seed=42,
+            spark, build, out, run_id="r2", n_buckets=4,
+            input_fingerprint="fp_a", params={"horizons": [1, 3, 7]},
         )
     # header recorded run-level metadata
     hdr = ManifestStore(tmp_path / "ckpt_fp" / "_manifest.jsonl").run_header("r2")
     assert hdr["input_fingerprint"] == "fp_a"
     assert hdr["params"] == {"horizons": [1, 3, 7]}
-    assert hdr["seed"] == 42
     # changed input → refuse resume
     with pytest.raises(RuntimeError, match="fingerprint changed"):
         resumable_backfill(
@@ -144,6 +161,9 @@ def test_fingerprint_parquet_dir_detects_change(spark, tmp_path):
     assert fp1 == fingerprint_parquet_dir(src)  # stable
     spark.range(101).write.mode("overwrite").parquet(src)
     assert fingerprint_parquet_dir(src) != fp1  # content change detected
+    # no local listing to vouch for → no fingerprint, never "unchanged"
+    assert fingerprint_parquet_dir(str(tmp_path / "missing")) is None
+    assert fingerprint_parquet_dir("s3a://bucket/x") is None
 
 
 def test_backtest_folds_single_plan(spark, turns):
