@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 
 SF0001 = "/root/testdata/sf0.001"
 
@@ -112,18 +112,9 @@ def _q_history_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_psi_text_len(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
+    from kkbox_churn_prediction_spark.operators.psi import psi_from_bins
 
-    from kkbox_churn_prediction_spark.operators.psi import fixed_width_bins, psi_from_bins
-    from kkbox_churn_prediction_spark.sources.events import conversations_from_events
-
-    conv = conversations_from_events(spark, sf_dir)
-    week_no = F.floor(F.unix_micros(F.date_trunc("week", F.col("ts"))) / F.lit(7 * 86400 * 1_000_000))
-    binned = conv.select(
-        F.when(week_no % 2 == 0, F.lit("even")).otherwise(F.lit("odd")).alias("fold"),
-        fixed_width_bins(F.expr("CAST(length(text) AS BIGINT)"), 5.0, 10).alias("bin"),
-    )
-    return psi_from_bins(binned, "fold", "bin", ref_fold="even")
+    return psi_from_bins(_text_len_bins(spark, sf_dir), "fold", "bin", ref_fold="even")
 
 
 def _q_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -288,6 +279,32 @@ def _conv(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kkbox_churn_prediction_spark.sources.events import conversations_from_events
 
     return conversations_from_events(spark, sf_dir)
+
+
+def _week_parity_fold() -> Column:
+    """'even'/'odd' by the parity of ``ts``'s week number since the
+    epoch — the two folds of the drift and backtest gates (the
+    oracles' ``CASE WHEN ... % 2 = 0``)."""
+    from pyspark.sql import functions as F
+
+    week_no = F.floor(
+        F.unix_micros(F.date_trunc("week", F.col("ts"))) / F.lit(7 * 86400 * 1_000_000)
+    )
+    return F.when(week_no % 2 == 0, F.lit("even")).otherwise(F.lit("odd"))
+
+
+def _text_len_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(fold, bin)``: text length in width-5 bins clamped to 0..9,
+    per week-parity fold — the input of every ``*_text_len`` binned
+    drift gate."""
+    from pyspark.sql import functions as F
+
+    from kkbox_churn_prediction_spark.operators.psi import fixed_width_bins
+
+    return _conv(spark, sf_dir).select(
+        _week_parity_fold().alias("fold"),
+        fixed_width_bins(F.expr("CAST(length(text) AS BIGINT)"), 5.0, 10).alias("bin"),
+    )
 
 
 def _q_mode_tool(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -611,11 +628,8 @@ def _q_psi_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     conv = _conv(spark, sf_dir)
-    week_no = F.floor(
-        F.unix_micros(F.date_trunc("week", F.col("ts"))) / F.lit(7 * 86400 * 1_000_000)
-    )
     folded = conv.select(
-        F.when(week_no % 2 == 0, F.lit("even")).otherwise(F.lit("odd")).alias("fold"),
+        _week_parity_fold().alias("fold"),
         F.expr("CAST(length(text) AS BIGINT)").alias("v"),
     )
     edges = [
@@ -1122,19 +1136,9 @@ def _q_psi_categorical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Categorical drift PSI over role/tool distributions across the
     even/odd-week folds (reference ``src/psi.py:96-102`` value_counts
     reindexed to the category union)."""
-    from pyspark.sql import functions as F
-
     from kkbox_churn_prediction_spark.operators.psi import psi_categorical
 
-    conv = _conv(spark, sf_dir)
-    week_no = F.floor(
-        F.unix_micros(F.date_trunc("week", F.col("ts"))) / F.lit(7 * 86400 * 1_000_000)
-    )
-    folded = conv.select(
-        F.when(week_no % 2 == 0, F.lit("even")).otherwise(F.lit("odd")).alias("fold"),
-        "role",
-        "tool",
-    )
+    folded = _conv(spark, sf_dir).select(_week_parity_fold().alias("fold"), "role", "tool")
     return psi_categorical(folded, "fold", ["role", "tool"], ref_fold="even")
 
 
@@ -2451,23 +2455,11 @@ def _q_wasserstein_text_len(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binned 1-Wasserstein drift of text length between the even/odd
     week folds — the earth-mover companion to psi_text_len (same
     binning, answer in characters instead of a divergence)."""
-    from pyspark.sql import functions as F
+    from kkbox_churn_prediction_spark.operators.psi import wasserstein_from_bins
 
-    from kkbox_churn_prediction_spark.operators.psi import (
-        fixed_width_bins,
-        wasserstein_from_bins,
+    return wasserstein_from_bins(
+        _text_len_bins(spark, sf_dir), "fold", "bin", ref_fold="even", bin_width=5.0
     )
-    from kkbox_churn_prediction_spark.sources.events import conversations_from_events
-
-    conv = conversations_from_events(spark, sf_dir)
-    week_no = F.floor(
-        F.unix_micros(F.date_trunc("week", F.col("ts"))) / F.lit(7 * 86400 * 1_000_000)
-    )
-    binned = conv.select(
-        F.when(week_no % 2 == 0, F.lit("even")).otherwise(F.lit("odd")).alias("fold"),
-        fixed_width_bins(F.expr("CAST(length(text) AS BIGINT)"), 5.0, 10).alias("bin"),
-    )
-    return wasserstein_from_bins(binned, "fold", "bin", ref_fold="even", bin_width=5.0)
 
 
 def _q_jsd_text_len(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2475,23 +2467,9 @@ def _q_jsd_text_len(spark: SparkSession, sf_dir: str) -> DataFrame:
     week folds — the bounded, clip-free member of the drift family
     (same binning as psi_text_len / wasserstein_text_len; answer in
     [0,1] bits)."""
-    from pyspark.sql import functions as F
+    from kkbox_churn_prediction_spark.operators.psi import jsd_from_bins
 
-    from kkbox_churn_prediction_spark.operators.psi import (
-        fixed_width_bins,
-        jsd_from_bins,
-    )
-    from kkbox_churn_prediction_spark.sources.events import conversations_from_events
-
-    conv = conversations_from_events(spark, sf_dir)
-    week_no = F.floor(
-        F.unix_micros(F.date_trunc("week", F.col("ts"))) / F.lit(7 * 86400 * 1_000_000)
-    )
-    binned = conv.select(
-        F.when(week_no % 2 == 0, F.lit("even")).otherwise(F.lit("odd")).alias("fold"),
-        fixed_width_bins(F.expr("CAST(length(text) AS BIGINT)"), 5.0, 10).alias("bin"),
-    )
-    return jsd_from_bins(binned, "fold", "bin", ref_fold="even")
+    return jsd_from_bins(_text_len_bins(spark, sf_dir), "fold", "bin", ref_fold="even")
 
 
 def _q_activity_clock(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3108,11 +3086,8 @@ def _q_qq_shift_text_len(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kkbox_churn_prediction_spark.sources.events import conversations_from_events
 
     conv = conversations_from_events(spark, sf_dir)
-    week_no = F.floor(
-        F.unix_micros(F.date_trunc("week", F.col("ts"))) / F.lit(7 * 86400 * 1_000_000)
-    )
     tagged = conv.select(
-        F.when(week_no % 2 == 0, F.lit("even")).otherwise(F.lit("odd")).alias("fold"),
+        _week_parity_fold().alias("fold"),
         F.length("text").cast("long").alias("text_len"),
     )
     return qq_shift(tagged, "text_len", "fold", ref_fold="even")
@@ -3139,16 +3114,9 @@ def _q_transition_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     even-week fold, top-1 accuracy scored on the odd weeks — a full
     train/apply split inside the engine (the floor any sequence model
     must beat)."""
-    from pyspark.sql import functions as F
-
     from kkbox_churn_prediction_spark.operators.lags import transition_backtest
 
-    conv = _conv(spark, sf_dir)
-    week_no = F.floor(
-        F.unix_micros(F.date_trunc("week", F.col("ts"))) / F.lit(7 * 86400 * 1_000_000)
-    )
-    fold = F.when(week_no % 2 == 0, F.lit("even")).otherwise(F.lit("odd"))
-    return transition_backtest(conv, fold, train_fold="even")
+    return transition_backtest(_conv(spark, sf_dir), _week_parity_fold(), train_fold="even")
 
 
 def _q_source_tf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3318,23 +3286,9 @@ def _q_ks_text_len(spark: SparkSession, sf_dir: str) -> DataFrame:
     week folds — the sup-norm member of the drift family (same
     binning as psi/jsd/wasserstein_text_len; exact-integer numerator,
     answer in [0,1])."""
-    from pyspark.sql import functions as F
+    from kkbox_churn_prediction_spark.operators.psi import ks_from_bins
 
-    from kkbox_churn_prediction_spark.operators.psi import (
-        fixed_width_bins,
-        ks_from_bins,
-    )
-    from kkbox_churn_prediction_spark.sources.events import conversations_from_events
-
-    conv = conversations_from_events(spark, sf_dir)
-    week_no = F.floor(
-        F.unix_micros(F.date_trunc("week", F.col("ts"))) / F.lit(7 * 86400 * 1_000_000)
-    )
-    binned = conv.select(
-        F.when(week_no % 2 == 0, F.lit("even")).otherwise(F.lit("odd")).alias("fold"),
-        fixed_width_bins(F.expr("CAST(length(text) AS BIGINT)"), 5.0, 10).alias("bin"),
-    )
-    return ks_from_bins(binned, "fold", "bin", ref_fold="even")
+    return ks_from_bins(_text_len_bins(spark, sf_dir), "fold", "bin", ref_fold="even")
 
 
 def _q_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3734,13 +3688,10 @@ def _q_quantile_match_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kkbox_churn_prediction_spark.operators.encoders import quantile_match
 
     conv = _conv(spark, sf_dir)
-    week_no = F.floor(
-        F.unix_micros(F.date_trunc("week", F.col("ts"))) / F.lit(7 * 86400 * 1_000_000)
-    )
     folded = conv.select(
         "conv_id",
         "turn_idx",
-        F.when(week_no % 2 == 0, F.lit("even")).otherwise(F.lit("odd")).alias("fold"),
+        _week_parity_fold().alias("fold"),
         F.expr("CAST(length(text) AS BIGINT)").alias("v"),
     )
     src = folded.where(F.col("fold") == "odd").select("conv_id", "turn_idx", "v")
@@ -5393,22 +5344,9 @@ def _q_cvm_text_len(spark: SparkSession, sf_dir: str) -> DataFrame:
     even/odd week folds — the integrated-squared-gap FIFTH lens of the
     drift family (same binning as psi/jsd/wasserstein/ks_text_len;
     exact decimal numerator, one division)."""
-    from pyspark.sql import functions as F
+    from kkbox_churn_prediction_spark.operators.psi import cvm_from_bins
 
-    from kkbox_churn_prediction_spark.operators.psi import (
-        cvm_from_bins,
-        fixed_width_bins,
-    )
-
-    conv = _conv(spark, sf_dir)
-    week_no = F.floor(
-        F.unix_micros(F.date_trunc("week", F.col("ts"))) / F.lit(7 * 86400 * 1_000_000)
-    )
-    binned = conv.select(
-        F.when(week_no % 2 == 0, F.lit("even")).otherwise(F.lit("odd")).alias("fold"),
-        fixed_width_bins(F.expr("CAST(length(text) AS BIGINT)"), 5.0, 10).alias("bin"),
-    )
-    return cvm_from_bins(binned, "fold", "bin", "even")
+    return cvm_from_bins(_text_len_bins(spark, sf_dir), "fold", "bin", "even")
 
 
 def _q_ap_by_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5920,22 +5858,9 @@ def _q_ad_text_len(spark: SparkSession, sf_dir: str) -> DataFrame:
     folds) — the SIXTH, tail-sensitive drift lens: the H(1−H)
     denominator amplifies extreme-quantile movement that KS/CvM
     under-weight; 1e-9-grid order-free term sums."""
-    from pyspark.sql import functions as F
+    from kkbox_churn_prediction_spark.operators.psi import anderson_darling_from_bins
 
-    from kkbox_churn_prediction_spark.operators.psi import (
-        anderson_darling_from_bins,
-        fixed_width_bins,
-    )
-
-    conv = _conv(spark, sf_dir)
-    week_no = F.floor(
-        F.unix_micros(F.date_trunc("week", F.col("ts"))) / F.lit(7 * 86400 * 1_000_000)
-    )
-    binned = conv.select(
-        F.when(week_no % 2 == 0, F.lit("even")).otherwise(F.lit("odd")).alias("fold"),
-        fixed_width_bins(F.expr("CAST(length(text) AS BIGINT)"), 5.0, 10).alias("bin"),
-    )
-    return anderson_darling_from_bins(binned, "fold", "bin", "even")
+    return anderson_darling_from_bins(_text_len_bins(spark, sf_dir), "fold", "bin", "even")
 
 
 def _q_label_shift(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,4 +1,4 @@
-"""PSI drift statistics as binned groupBy-agg (A11).
+"""Drift statistics as binned groupBy-agg (A11).
 
 The reference computes PSI driver-side in numpy per feature
 (``src/psi.py:18-34``: decile edges via ``np.quantile`` on the
@@ -8,19 +8,38 @@ loops features in Python and concatenates whole feature frames in
 pandas — fine at 1 row/entity, fatal at 10^12 turns.
 
 Re-expressed distributed (north-star: "PSI re-expressed as binned
-groupBy-agg across backtest folds"):
+groupBy-agg across backtest folds"), every binned lens is one shared
+count table, one of two shared views, and its own final expression —
+all column expressions, no UDF:
 
 1. bin each value — either fixed-width (:func:`fixed_width_bins`,
    fully deterministic, oracle-checkable) or reference-window decile
    edges (:func:`quantile_edges`, exact percentiles, matching
    ``np.quantile`` on the ref fold),
-2. ``groupBy(fold, bin).count()`` — one shuffle, map-side partials,
-3. normalize to frequencies per fold with a window sum, clip at
-   1e-6 (``src/psi.py:22-23``), and reduce Σ(a-e)·ln(a/e) per
-   feature — all column expressions, no UDF.
+2. :func:`_bin_counts` — ``groupBy(fold, bin).count()``, one shuffle
+   with map-side partials, persisted (folds × bins rows),
+3. a view over that table:
+
+   - :func:`_freq_view` — zero-filled frequencies ``p`` (current
+     fold) and ``q`` (reference) over current folds × observed bins;
+     NULL-bin rows count in the fold total but are never a bin. Used
+     by PSI (clip 1e-6, Σ(a-e)·ln(a/e)), categorical PSI, JSD and
+     ``streaming.drift.psi_over_windows``.
+   - :func:`_cdf_view` — zero-filled per-bin, running and total
+     counts of each current fold (``_n_b/_cum/_tot``) beside the
+     reference's (``_rn_b/_rcum/_rtot``) at a bin set the caller
+     passes; NULL-bin rows are ignored. KS, CvM and Anderson–Darling
+     pass the observed bins, Wasserstein its dense range;
+     :func:`ks_pair_matrix` uses the per-group half,
+     :func:`_cumulative`.
+
+The two views treat NULL bins differently because the DuckDB oracles
+do. :func:`qq_shift` works on percentiles, not bins, and uses neither.
 """
 
 from __future__ import annotations
+
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -83,46 +102,131 @@ def bucketize_by_edges(value: Column, edges: list[float]) -> Column:
     return F.when(value.isNotNull(), expr).cast("int")
 
 
+def _bin_counts(binned: DataFrame, *keys: str) -> DataFrame:
+    """The ``(*keys) → n`` count table every binned lens starts from:
+    ONE groupBy with map-side partials over the stream. It is folds ×
+    bins rows (tiny) but fans out into several branches (the fold
+    list, the bin set, the reference split) — persisted so the corpus
+    scan behind it runs once, not once per branch (4-6 scans measured
+    without)."""
+    return binned.groupBy(*keys).agg(F.count(F.lit(1)).alias("n")).persist()
+
+
+def _observed_bins(
+    counts: DataFrame, bin_col: str, keys: Sequence[str] = ()
+) -> DataFrame:
+    """The distinct non-NULL bins (per ``keys``) of a count table."""
+    return counts.where(F.col(bin_col).isNotNull()).select(*keys, bin_col).distinct()
+
+
+def _freq_view(
+    counts: DataFrame,
+    fold_col: str,
+    bin_col: str,
+    ref_fold,
+    keys: Sequence[str] = (),
+) -> DataFrame:
+    """``(fold, *keys, p, q)``: zero-filled frequencies of each current
+    fold (``p``) and of the reference (``q``) over current folds ×
+    observed bins, per ``keys`` (categorical PSI's ``feature``).
+
+    A NULL-bin row counts in its fold's total but is never a bin, so
+    NULLs deflate every bin's frequency (``value_counts / len``); a
+    fold seen only with NULL bins is still a current fold. The
+    observed-bins grid suffices: a bin empty in both folds has
+    ``p = q = 0``, which adds nothing to any lens built on this view.
+    """
+    is_ref = F.col(fold_col) == ref_fold
+    total = Window.partitionBy(fold_col, *keys)
+    freqs = counts.select(
+        fold_col,
+        *keys,
+        bin_col,
+        (F.col("n").cast("double") / F.sum("n").over(total)).alias("_f"),
+    ).where(F.col(bin_col).isNotNull())
+    cur_folds = counts.select(fold_col).where(~is_ref).distinct()
+    grid = cur_folds.crossJoin(F.broadcast(_observed_bins(counts, bin_col, keys)))
+    cur = freqs.where(~is_ref).withColumnRenamed("_f", "_p")
+    ref = freqs.where(is_ref).select(*keys, bin_col, F.col("_f").alias("_q"))
+    return (
+        grid.join(cur, [fold_col, *keys, bin_col], "left")
+        .join(F.broadcast(ref), [*keys, bin_col], "left")
+        .select(
+            fold_col,
+            *keys,
+            F.coalesce(F.col("_p"), F.lit(0.0)).alias("p"),
+            F.coalesce(F.col("_q"), F.lit(0.0)).alias("q"),
+        )
+    )
+
+
+def _psi(p: Column, q: Column) -> Column:
+    """``round(Σ (a−e)·ln(a/e), 6)`` with both sides clipped at 1e-6."""
+    a = F.greatest(p, F.lit(CLIP))
+    e = F.greatest(q, F.lit(CLIP))
+    return F.round(F.sum((a - e) * F.log(a / e)), 6).alias("psi")
+
+
+def _cumulative(
+    grid: DataFrame, counts: DataFrame, group_col: str, bin_col: str
+) -> DataFrame:
+    """``(group, bin, _n_b, _cum, _tot)`` at every ``grid`` row: the
+    bin's count zero-filled from ``counts``, the group's running count
+    through the bin, and the group's total over the grid's bins."""
+    n = F.coalesce(F.col("n"), F.lit(0))
+    w_tot = Window.partitionBy(group_col)
+    w_cum = w_tot.orderBy(bin_col).rowsBetween(Window.unboundedPreceding, 0)
+    return grid.join(counts, [group_col, bin_col], "left").select(
+        group_col,
+        bin_col,
+        n.cast("long").alias("_n_b"),
+        F.sum(n).over(w_cum).cast("long").alias("_cum"),
+        F.sum(n).over(w_tot).cast("long").alias("_tot"),
+    )
+
+
+def _cdf_view(
+    counts: DataFrame,
+    fold_col: str,
+    bin_col: str,
+    ref_fold,
+    bins: DataFrame,
+) -> DataFrame:
+    """``(fold, bin, _n_b, _cum, _tot, _rn_b, _rcum, _rtot)``: the
+    zero-filled step-CDF counts of each current fold at every bin of
+    ``bins`` beside the reference's (:func:`_cumulative` per side).
+
+    NULL-bin rows are ignored: ``bins`` holds no NULL, so they are in
+    neither a running count nor a total. A fold seen only with NULL
+    bins has ``_tot = 0`` and a missing reference ``_rtot = 0``;
+    lenses divide with ``try_divide`` and answer NULL, as the oracles'
+    NULL-on-zero-divide does.
+    """
+    cur_folds = counts.select(fold_col).where(F.col(fold_col) != ref_fold).distinct()
+    cur = _cumulative(cur_folds.crossJoin(F.broadcast(bins)), counts, fold_col, bin_col)
+    ref = _cumulative(
+        bins.select(F.lit(ref_fold).alias(fold_col), bin_col), counts, fold_col, bin_col
+    ).select(
+        bin_col,
+        F.col("_n_b").alias("_rn_b"),
+        F.col("_cum").alias("_rcum"),
+        F.col("_tot").alias("_rtot"),
+    )
+    return cur.join(F.broadcast(ref), [bin_col])
+
+
 def psi_from_bins(binned: DataFrame, fold_col: str, bin_col: str, ref_fold: str) -> DataFrame:
     """PSI of every fold vs ``ref_fold`` from a (fold, bin) stream.
 
     Input: one row per observation with fold + bin columns. Output:
     one row per non-reference fold with its PSI (round 6).
+
+    Shape: :func:`_bin_counts`, :func:`_freq_view`, then the clipped
+    Σ(a-e)·ln(a/e) per fold.
     """
-    # counts is folds×bins rows (tiny) but fans out into four branches
-    # (freqs, bins, cur_folds, the ref/cur splits) — persist so the
-    # corpus scan behind it runs ONCE, not once per branch (measured
-    # 4 parquet scans of the full corpus without this)
-    counts = (
-        binned.groupBy(fold_col, bin_col).agg(F.count(F.lit(1)).alias("n")).persist()
-    )
-    total = Window.partitionBy(fold_col)
-    freqs = counts.withColumn(
-        "freq", F.col("n").cast("double") / F.sum("n").over(total)
-    )
-    # dense fold×bin grid so a bin missing from either side still
-    # contributes its clipped term (a bin absent from BOTH folds
-    # contributes 0, so observed-bins == full-range grid)
-    bins = counts.select(bin_col).distinct()
-    cur_folds = counts.select(fold_col).where(F.col(fold_col) != ref_fold).distinct()
-    grid = cur_folds.crossJoin(F.broadcast(bins))
-    ref = freqs.where(F.col(fold_col) == ref_fold).select(
-        bin_col, F.col("freq").alias("ref_freq")
-    )
-    cur = freqs.where(F.col(fold_col) != ref_fold).select(fold_col, bin_col, "freq")
-    joined = (
-        grid.join(cur, [fold_col, bin_col], "left")
-        .join(F.broadcast(ref), [bin_col], "left")
-        .select(
-            F.col(fold_col),
-            F.greatest(F.coalesce(F.col("freq"), F.lit(0.0)), F.lit(CLIP)).alias("a"),
-            F.greatest(F.coalesce(F.col("ref_freq"), F.lit(0.0)), F.lit(CLIP)).alias("e"),
-        )
-    )
-    return (
-        joined.groupBy(fold_col)
-        .agg(F.round(F.sum((F.col("a") - F.col("e")) * F.log(F.col("a") / F.col("e"))), 6).alias("psi"))
-    )
+    counts = _bin_counts(binned, fold_col, bin_col)
+    view = _freq_view(counts, fold_col, bin_col, ref_fold)
+    return view.groupBy(fold_col).agg(_psi(F.col("p"), F.col("q")))
 
 
 def psi_categorical(
@@ -143,12 +247,16 @@ def psi_categorical(
 
     Distributed shape: all features melt into ONE (fold, feature,
     value) stream (explode of a struct array — no per-feature job
-    loop, unlike the reference's Python feature loop), one
-    groupBy(fold, feature, value) count with map-side partials, tiny
-    fold-totals broadcast, dense grid join as in
-    :func:`psi_from_bins`. The grid uses the all-fold category union;
-    a category absent from both a fold and the reference contributes
-    a zero term, so this equals the reference's per-pair union.
+    loop, unlike the reference's Python feature loop), then
+    :func:`_bin_counts` and :func:`_freq_view` keyed by ``feature``,
+    as in :func:`psi_from_bins`. NULL values stay in the count table
+    as their own rows, so the view's per-(fold, feature) totals ARE
+    the fold row totals (each df row contributes exactly one value
+    per feature) — no second scan of df for the denominator. The grid
+    uses the all-fold category union; a category absent from both a
+    fold and the reference contributes a zero term, so this equals
+    the reference's per-pair union. A fold whose values are all NULL
+    still gets a row per feature, every category at the clip floor.
     """
     melted = df.select(
         F.col(fold_col),
@@ -164,48 +272,9 @@ def psi_categorical(
             )
         ).alias("_fv"),
     ).select(fold_col, F.col("_fv.feature").alias("feature"), F.col("_fv.val").alias("val"))
-    # ONE corpus scan: count the melted stream with nulls kept as
-    # their own group — per-(fold, feature) sums of that table ARE
-    # the fold row totals (each df row contributes exactly one value
-    # per feature), so no second scan of df for the denominator; the
-    # persisted count table then feeds freqs, the category union, and
-    # the fold list (6 corpus scans measured on the pre-persist gate)
-    counts_all = (
-        melted.groupBy(fold_col, "feature", "val")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .persist()
-    )
-    totals = counts_all.groupBy(fold_col, "feature").agg(
-        F.sum("n").alias("_tot")
-    )
-    counts = counts_all.where(F.col("val").isNotNull())
-    freqs = counts.join(F.broadcast(totals), [fold_col, "feature"]).withColumn(
-        "freq", F.col("n").cast("double") / F.col("_tot")
-    )
-    cats = counts.select("feature", "val").distinct()
-    cur_folds = counts.select(fold_col).where(F.col(fold_col) != ref_fold).distinct()
-    grid = cur_folds.crossJoin(F.broadcast(cats))
-    ref = freqs.where(F.col(fold_col) == ref_fold).select(
-        "feature", "val", F.col("freq").alias("ref_freq")
-    )
-    cur = freqs.where(F.col(fold_col) != ref_fold).select(
-        fold_col, "feature", "val", "freq"
-    )
-    joined = (
-        grid.join(cur, [fold_col, "feature", "val"], "left")
-        .join(F.broadcast(ref), ["feature", "val"], "left")
-        .select(
-            F.col(fold_col),
-            F.col("feature"),
-            F.greatest(F.coalesce(F.col("freq"), F.lit(0.0)), F.lit(CLIP)).alias("a"),
-            F.greatest(F.coalesce(F.col("ref_freq"), F.lit(0.0)), F.lit(CLIP)).alias("e"),
-        )
-    )
-    return joined.groupBy("feature", fold_col).agg(
-        F.round(
-            F.sum((F.col("a") - F.col("e")) * F.log(F.col("a") / F.col("e"))), 6
-        ).alias("psi")
-    )
+    counts = _bin_counts(melted, fold_col, "feature", "val")
+    view = _freq_view(counts, fold_col, "val", ref_fold, keys=["feature"])
+    return view.groupBy("feature", fold_col).agg(_psi(F.col("p"), F.col("q")))
 
 
 def jsd_from_bins(
@@ -226,38 +295,17 @@ def jsd_from_bins(
     blow-up). Monitoring dashboards alarm on JSD > ~0.1 bits where
     PSI's unboundedness makes thresholds data-dependent.
 
-    Shape: identical to :func:`psi_from_bins` — ONE (fold, bin)
-    count agg with map-side partials; the fold×bin grid, the
-    broadcast reference frequencies, and the Σ terms all run
-    post-agg on gate-scale rows. Observed-bins grid suffices: a bin
-    empty in both p and q contributes 0.
+    Shape: :func:`_bin_counts` and :func:`_freq_view`, as in
+    :func:`psi_from_bins`; only the Σ term differs.
     """
-    # counts is folds×bins rows (tiny) but fans out into FOUR branches
-    # (freqs, the bin grid, the fold list, the ref split) — persist so
-    # the corpus scan behind it runs once, not once per branch
-    counts = (
-        binned.groupBy(fold_col, bin_col).agg(F.count(F.lit(1)).alias("n")).persist()
-    )
-    total = Window.partitionBy(fold_col)
-    freqs = counts.withColumn(
-        "freq", F.col("n").cast("double") / F.sum("n").over(total)
-    )
-    bins = counts.select(bin_col).distinct()
-    cur_folds = counts.select(fold_col).where(F.col(fold_col) != ref_fold).distinct()
-    grid = cur_folds.crossJoin(F.broadcast(bins))
-    ref = freqs.where(F.col(fold_col) == ref_fold).select(
-        bin_col, F.col("freq").alias("ref_freq")
-    )
-    cur = freqs.where(F.col(fold_col) != ref_fold).select(fold_col, bin_col, "freq")
-    p = F.coalesce(F.col("freq"), F.lit(0.0))
-    q = F.coalesce(F.col("ref_freq"), F.lit(0.0))
+    counts = _bin_counts(binned, fold_col, bin_col)
+    p, q = F.col("p"), F.col("q")
     m = (p + q) / F.lit(2.0)
     term = F.when(p > 0, p * F.log2(p / m)).otherwise(F.lit(0.0)) + F.when(
         q > 0, q * F.log2(q / m)
     ).otherwise(F.lit(0.0))
     return (
-        grid.join(cur, [fold_col, bin_col], "left")
-        .join(F.broadcast(ref), [bin_col], "left")
+        _freq_view(counts, fold_col, bin_col, ref_fold)
         .groupBy(fold_col)
         .agg(F.round(F.sum(term) / 2.0, 6).alias("jsd"))
         .select(F.col(fold_col).alias("fold"), "jsd")
@@ -279,51 +327,27 @@ def wasserstein_from_bins(
     clip); W1 is finite and in the VALUE's units (here: characters of
     text length), so "the distribution moved ~2 chars" is readable.
 
-    Shape: identical to ``psi_from_bins`` — ONE (fold, bin) count agg
-    over the stream; CDFs, the bin grid (folds × bins, tiny), and the
-    final |Δ|·width sum all run post-agg. The grid spans the DENSE
-    integer bin range [min_bin, max_bin] — bins empty in EVERY fold
-    still contribute their CDF gap, otherwise mass jumping across
-    unoccupied bins is undercounted (W1 of "all at bin 0" vs "all at
-    bin 9" must be 9·width, not 1·width).
+    Shape: :func:`_bin_counts` and :func:`_cdf_view`, evaluated over
+    the DENSE integer bin range [min_bin, max_bin] — bins empty in
+    EVERY fold still contribute their CDF gap, otherwise mass jumping
+    across unoccupied bins is undercounted (W1 of "all at bin 0" vs
+    "all at bin 9" must be 9·width, not 1·width). A fold whose rows
+    all have NULL bins has no CDF and answers NULL; with no reference
+    rows at all there is no output row.
     """
-    # persist: the tiny (fold, bin) count table feeds folds, the bin
-    # range, and the dense-grid join — without it each branch re-scans
-    # the full corpus (measured 6 scans on the shipped gate)
-    counts = (
-        binned.groupBy(fold_col, bin_col).agg(F.count(F.lit(1)).alias("n")).persist()
-    )
-    folds = counts.select(fold_col).distinct()
-    bins = counts.agg(
+    counts = _bin_counts(binned, fold_col, bin_col)
+    dense = counts.agg(
         F.min(bin_col).alias("_lo"), F.max(bin_col).alias("_hi")
     ).select(F.explode(F.sequence(F.col("_lo"), F.col("_hi"))).alias(bin_col))
-    grid = folds.crossJoin(bins)
-    full = grid.join(counts, [fold_col, bin_col], "left").select(
-        fold_col, bin_col, F.coalesce(F.col("n"), F.lit(0)).alias("n")
+    gap = F.abs(
+        F.try_divide(F.col("_cum"), F.col("_tot"))
+        - F.try_divide(F.col("_rcum"), F.col("_rtot"))
     )
-    w_cdf = (
-        Window.partitionBy(fold_col)
-        .orderBy(bin_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_tot = Window.partitionBy(fold_col)
-    cdf = full.select(
-        fold_col,
-        bin_col,
-        (F.sum("n").over(w_cdf) / F.sum("n").over(w_tot)).alias("cdf"),
-    )
-    ref = cdf.where(F.col(fold_col) == ref_fold).select(
-        bin_col, F.col("cdf").alias("ref_cdf")
-    )
-    cur = cdf.where(F.col(fold_col) != ref_fold)
     return (
-        cur.join(F.broadcast(ref), bin_col)
+        _cdf_view(counts, fold_col, bin_col, ref_fold, dense)
+        .join(counts.where(F.col(fold_col) == ref_fold), how="left_semi")
         .groupBy(fold_col)
-        .agg(
-            F.round(
-                F.sum(F.abs(F.col("cdf") - F.col("ref_cdf"))) * float(bin_width), 6
-            ).alias("wasserstein")
-        )
+        .agg(F.round(F.sum(gap) * float(bin_width), 6).alias("wasserstein"))
         .select(F.col(fold_col).alias("fold"), "wasserstein")
     )
 
@@ -353,59 +377,17 @@ def ks_from_bins(
     pick the same exact numerator and perform one identical double
     division by ``N_cur·N_ref``. No float summation anywhere.
 
-    Shape: identical to the siblings — ONE (fold, bin) count agg with
-    map-side partials; cumsums, the fold×bin grid, and the max all run
-    post-agg on domain-bounded rows (folds × bins).
+    Shape: :func:`_bin_counts` and :func:`_cdf_view` at the observed
+    bins, then the max per fold.
     """
     dec = "decimal(18,0)"
-    counts = (
-        binned.groupBy(fold_col, bin_col).agg(F.count(F.lit(1)).alias("n")).persist()
-    )
-    bins = counts.select(bin_col).distinct()
-    cur_folds = counts.select(fold_col).where(F.col(fold_col) != ref_fold).distinct()
-    grid = cur_folds.crossJoin(F.broadcast(bins))
-
-    w_cdf = (
-        Window.partitionBy(fold_col)
-        .orderBy(bin_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_tot = Window.partitionBy(fold_col)
-
-    def cum(side: DataFrame) -> DataFrame:
-        return side.select(
-            fold_col,
-            bin_col,
-            F.sum("n").over(w_cdf).cast("long").alias("_cum"),
-            F.sum("n").over(w_tot).cast("long").alias("_tot"),
-        )
-
-    # evaluate BOTH folds' step CDFs at the full union of observed
-    # bins (zero-filled), so jump points of either side are covered
-    cur_full = grid.join(
-        counts.where(F.col(fold_col) != ref_fold), [fold_col, bin_col], "left"
-    ).select(fold_col, bin_col, F.coalesce(F.col("n"), F.lit(0)).alias("n"))
-    ref_full = bins.join(
-        counts.where(F.col(fold_col) == ref_fold).select(bin_col, "n"),
-        [bin_col],
-        "left",
-    ).select(
-        F.lit(ref_fold).alias(fold_col),
-        bin_col,
-        F.coalesce(F.col("n"), F.lit(0)).alias("n"),
-    )
-    cur = cum(cur_full)
-    ref = cum(ref_full).select(
-        bin_col,
-        F.col("_cum").alias("_rcum"),
-        F.col("_tot").alias("_rtot"),
-    )
+    counts = _bin_counts(binned, fold_col, bin_col)
     gap = F.abs(
         F.col("_cum").cast(dec) * F.col("_rtot").cast(dec)
         - F.col("_rcum").cast(dec) * F.col("_tot").cast(dec)
     )
     per = (
-        cur.join(F.broadcast(ref), [bin_col])
+        _cdf_view(counts, fold_col, bin_col, ref_fold, _observed_bins(counts, bin_col))
         .groupBy(fold_col)
         .agg(
             F.max(gap).alias("_num"),
@@ -517,60 +499,18 @@ def cvm_from_bins(
     squaring (identical expression both engines) — the documented
     big-N variant.
 
-    Shape: identical to the KS/PSI siblings — ONE (fold, bin) count
-    agg with map-side partials; cumsums and the weighted reduce run
-    post-agg on domain-bounded rows (folds × bins).
+    Shape: :func:`_bin_counts` and :func:`_cdf_view` at the observed
+    bins, as in :func:`ks_from_bins`; only the per-fold reduce differs.
     """
     dec = "decimal(38,0)"
-    counts = (
-        binned.groupBy(fold_col, bin_col).agg(F.count(F.lit(1)).alias("n")).persist()
-    )
-    bins = counts.select(bin_col).distinct()
-    cur_folds = counts.select(fold_col).where(F.col(fold_col) != ref_fold).distinct()
-    grid = cur_folds.crossJoin(F.broadcast(bins))
-
-    w_cdf = (
-        Window.partitionBy(fold_col)
-        .orderBy(bin_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_tot = Window.partitionBy(fold_col)
-
-    def cum(side: DataFrame) -> DataFrame:
-        return side.select(
-            fold_col,
-            bin_col,
-            F.col("n").cast("long").alias("_n_b"),
-            F.sum("n").over(w_cdf).cast("long").alias("_cum"),
-            F.sum("n").over(w_tot).cast("long").alias("_tot"),
-        )
-
-    cur_full = grid.join(
-        counts.where(F.col(fold_col) != ref_fold), [fold_col, bin_col], "left"
-    ).select(fold_col, bin_col, F.coalesce(F.col("n"), F.lit(0)).alias("n"))
-    ref_full = bins.join(
-        counts.where(F.col(fold_col) == ref_fold).select(bin_col, "n"),
-        [bin_col],
-        "left",
-    ).select(
-        F.lit(ref_fold).alias(fold_col),
-        bin_col,
-        F.coalesce(F.col("n"), F.lit(0)).alias("n"),
-    )
-    cur = cum(cur_full)
-    ref = cum(ref_full).select(
-        bin_col,
-        F.col("_n_b").alias("_rn_b"),
-        F.col("_cum").alias("_rcum"),
-        F.col("_tot").alias("_rtot"),
-    )
+    counts = _bin_counts(binned, fold_col, bin_col)
     gap = (
         F.col("_cum").cast(dec) * F.col("_rtot").cast(dec)
         - F.col("_rcum").cast(dec) * F.col("_tot").cast(dec)
     )
     term = gap * gap * (F.col("_n_b") + F.col("_rn_b")).cast(dec)
     per = (
-        cur.join(F.broadcast(ref), [bin_col])
+        _cdf_view(counts, fold_col, bin_col, ref_fold, _observed_bins(counts, bin_col))
         .groupBy(fold_col)
         .agg(
             F.sum(term).alias("_num"),
@@ -616,53 +556,11 @@ def anderson_darling_from_bins(
     ONE fixed-shape double chain floored onto the 1e-9 grid and
     summed as decimal (order-free) — the CvM/AP discipline.
 
-    Shape: identical to the KS/CvM siblings — one (fold, bin) count
-    agg, bounded-table windows, ≤bins-row reduce.
+    Shape: :func:`_bin_counts` and :func:`_cdf_view` at the observed
+    bins, as in :func:`ks_from_bins`; only the per-fold reduce differs.
     """
     dec = "decimal(38,0)"
-    counts = (
-        binned.groupBy(fold_col, bin_col).agg(F.count(F.lit(1)).alias("n")).persist()
-    )
-    bins = counts.select(bin_col).distinct()
-    cur_folds = counts.select(fold_col).where(F.col(fold_col) != ref_fold).distinct()
-    grid = cur_folds.crossJoin(F.broadcast(bins))
-
-    w_cdf = (
-        Window.partitionBy(fold_col)
-        .orderBy(bin_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_tot = Window.partitionBy(fold_col)
-
-    def cum(side: DataFrame) -> DataFrame:
-        return side.select(
-            fold_col,
-            bin_col,
-            F.col("n").cast("long").alias("_n_b"),
-            F.sum("n").over(w_cdf).cast("long").alias("_cum"),
-            F.sum("n").over(w_tot).cast("long").alias("_tot"),
-        )
-
-    cur_full = grid.join(
-        counts.where(F.col(fold_col) != ref_fold), [fold_col, bin_col], "left"
-    ).select(fold_col, bin_col, F.coalesce(F.col("n"), F.lit(0)).alias("n"))
-    ref_full = bins.join(
-        counts.where(F.col(fold_col) == ref_fold).select(bin_col, "n"),
-        [bin_col],
-        "left",
-    ).select(
-        F.lit(ref_fold).alias(fold_col),
-        bin_col,
-        F.coalesce(F.col("n"), F.lit(0)).alias("n"),
-    )
-    cur = cum(cur_full)
-    ref = cum(ref_full).select(
-        bin_col,
-        F.col("_n_b").alias("_rn_b"),
-        F.col("_cum").alias("_rcum"),
-        F.col("_tot").alias("_rtot"),
-    )
-    j = cur.join(F.broadcast(ref), [bin_col])
+    counts = _bin_counts(binned, fold_col, bin_col)
     gap = (
         F.col("_cum").cast("double") * F.col("_rtot").cast("double")
         - F.col("_rcum").cast("double") * F.col("_tot").cast("double")
@@ -689,10 +587,14 @@ def anderson_darling_from_bins(
             )
         ).cast(dec),
     )
-    per = j.groupBy(fold_col).agg(
-        F.sum(term).alias("_num"),
-        F.max("_tot").alias("_n"),
-        F.max("_rtot").alias("_rn"),
+    per = (
+        _cdf_view(counts, fold_col, bin_col, ref_fold, _observed_bins(counts, bin_col))
+        .groupBy(fold_col)
+        .agg(
+            F.sum(term).alias("_num"),
+            F.max("_tot").alias("_n"),
+            F.max("_rtot").alias("_rn"),
+        )
     )
     return per.select(
         F.col(fold_col).alias("fold"),
@@ -715,34 +617,18 @@ def ks_pair_matrix(
     disagreeing with each other). Output per pair (a < b):
     ``(group_a, group_b, ks, n_a, n_b)``.
 
-    Shape: ONE (group, bin) count agg; cumulative CDFs over the
-    bounded per-group bins; the pair join runs on the (groups ×
+    Shape: :func:`_bin_counts`, then :func:`_cumulative` over every
+    group × the observed bins; the pair join runs on that (groups ×
     bins)-sized CDF table — k²·bins rows, domain-bounded regardless
     of row count. Exact decimal cross-product numerators (the
-    ks_from_bins discipline), one division per pair.
+    ks_from_bins discipline), one division per pair; a group whose
+    rows all have NULL bins has ``n = 0`` and KS NULL.
     """
     dec = "decimal(18,0)"
-    counts = binned.groupBy(group_col, bin_col).agg(
-        F.count(F.lit(1)).alias("n")
-    )
+    counts = _bin_counts(binned, group_col, bin_col)
     groups = counts.select(group_col).distinct()
-    bins = counts.select(bin_col).distinct()
-    grid = groups.crossJoin(F.broadcast(bins))
-    full = grid.join(counts, [group_col, bin_col], "left").select(
-        group_col, bin_col, F.coalesce(F.col("n"), F.lit(0)).alias("n")
-    )
-    w_cdf = (
-        Window.partitionBy(group_col)
-        .orderBy(bin_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_tot = Window.partitionBy(group_col)
-    cdf = full.select(
-        group_col,
-        bin_col,
-        F.sum("n").over(w_cdf).cast("long").alias("_cum"),
-        F.sum("n").over(w_tot).cast("long").alias("_tot"),
-    )
+    grid = groups.crossJoin(F.broadcast(_observed_bins(counts, bin_col)))
+    cdf = _cumulative(grid, counts, group_col, bin_col)
     left = cdf.select(
         F.col(group_col).alias("group_a"),
         bin_col,
@@ -765,14 +651,14 @@ def ks_pair_matrix(
         F.max("_na").alias("_n_a"),
         F.max("_nb").alias("_n_b"),
     )
+    ks = F.try_divide(
+        F.col("_num").cast("double"),
+        F.col("_n_a").cast("double") * F.col("_n_b").cast("double"),
+    )
     return per.select(
         "group_a",
         "group_b",
-        F.round(
-            F.col("_num").cast("double")
-            / (F.col("_n_a").cast("double") * F.col("_n_b").cast("double")),
-            6,
-        ).alias("ks"),
+        F.round(ks, 6).alias("ks"),
         F.col("_n_a").cast("long").alias("n_a"),
         F.col("_n_b").cast("long").alias("n_b"),
     ).orderBy("group_a", "group_b")

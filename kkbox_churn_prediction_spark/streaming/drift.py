@@ -10,7 +10,11 @@ watermark passes, late turns beyond it are dropped, exactly the batch
 leak-guard's streaming counterpart); the PSI half is batch
 post-processing over the sink's tiny (window × category) counts
 table — the lambda shape: heavy reduction in the stream, metric math
-over finalized aggregates.
+over finalized aggregates. That math is the batch drift family's own:
+the counts table goes straight into ``operators.psi``'s frequency
+view (``_freq_view``, windows as folds, categories as bins) and its
+clipped PSI sum (``_psi``), so batch and streaming PSI cannot drift
+apart.
 
 State per window is one count per (window, category) — bounded by
 category cardinality, reclaimed at watermark. No custom state, no
@@ -19,10 +23,10 @@ Python in the stream.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kkbox_churn_prediction_spark.operators.psi import CLIP
+from kkbox_churn_prediction_spark.operators.psi import _freq_view, _psi
 
 
 def streaming_category_counts(
@@ -58,48 +62,18 @@ def psi_over_windows(
 ) -> DataFrame:
     """(window_start, psi) for every window vs the reference window,
     from a finalized (window_start, category, n) counts table — the
-    same clip/grid discipline as ``psi_categorical``. Runs over the
-    sink output (tiny: windows × categories), so the monitor can
-    re-evaluate on every trigger without touching raw turns."""
-    # snapshot the counts first: the PSI grid self-joins three
+    frequency view and clipped PSI of ``psi_from_bins``, with windows
+    as folds and categories as bins. Runs over the sink output (tiny:
+    windows × categories), so the monitor can re-evaluate on every
+    trigger without touching raw turns."""
+    # snapshot the counts first: the frequency view self-joins three
     # branches of this plan, and a streaming memory-sink leaf fails
     # Spark's self-join attribute dedup ("conflicting references").
     # The table is windows × categories — materializing it is the
     # monitor's intended cost model anyway.
     counts = counts.localCheckpoint(eager=True)
-    totals = Window.partitionBy("window_start")
-    freqs = counts.withColumn(
-        "freq", F.col("n").cast("double") / F.sum("n").over(totals)
-    )
-    cats = counts.select(category_col).distinct()
-    wins = (
-        counts.select("window_start")
-        .where(F.col("window_start") != ref_window_start)
-        .distinct()
-    )
-    grid = wins.crossJoin(F.broadcast(cats))
-    ref = freqs.where(F.col("window_start") == ref_window_start).select(
-        category_col, F.col("freq").alias("ref_freq")
-    )
-    cur = freqs.where(F.col("window_start") != ref_window_start).select(
-        "window_start", category_col, "freq"
-    )
-    joined = (
-        grid.join(cur, ["window_start", category_col], "left")
-        .join(F.broadcast(ref), [category_col], "left")
-        .select(
-            "window_start",
-            F.greatest(F.coalesce(F.col("freq"), F.lit(0.0)), F.lit(CLIP)).alias("a"),
-            F.greatest(F.coalesce(F.col("ref_freq"), F.lit(0.0)), F.lit(CLIP)).alias(
-                "e"
-            ),
-        )
-    )
-    return joined.groupBy("window_start").agg(
-        F.round(
-            F.sum((F.col("a") - F.col("e")) * F.log(F.col("a") / F.col("e"))), 6
-        ).alias("psi")
-    )
+    view = _freq_view(counts, "window_start", category_col, ref_window_start)
+    return view.groupBy("window_start").agg(_psi(F.col("p"), F.col("q")))
 
 
 def srm_over_windows(

@@ -254,6 +254,91 @@ def test_ks_from_bins_unequal_sizes_exact(spark):
     assert out["ks"] == round(5 / 21, 6)
 
 
+def test_wasserstein_all_null_fold_is_null(spark):
+    """A current fold whose rows all have NULL bins has no CDF: it
+    answers NULL, as the KS/CvM/AD siblings do, instead of raising
+    DIVIDE_BY_ZERO on 0/0."""
+    from kkbox_churn_prediction_spark.operators.psi import (
+        ks_from_bins,
+        wasserstein_from_bins,
+    )
+
+    df = spark.createDataFrame(
+        [("ref", 0), ("ref", 1), ("cur", None), ("cur", None)],
+        "fold string, bin int",
+    )
+    out = wasserstein_from_bins(df, "fold", "bin", "ref", 1.0).collect()
+    assert [tuple(r) for r in out] == [("cur", None)]
+    assert [tuple(r) for r in ks_from_bins(df, "fold", "bin", "ref").collect()] == [
+        ("cur", None, 0, 2)
+    ]
+
+
+_EDGE_BASE = [
+    ("ref", 0), ("ref", 1), ("ref", 1), ("ref", 3),
+    ("cur", 1), ("cur", 2), ("cur", 2), ("cur", 4),
+]
+
+
+@pytest.mark.parametrize(
+    "rows, psi, jsd, w1, cdf",
+    [
+        pytest.param(
+            _EDGE_BASE, 16.05633, 0.655639, 1.0,
+            (0.5, 0.109375, 1.035714, 4, 4), id="base",
+        ),
+        # NULL bins count in the PSI/JSD fold totals; the CDF lenses
+        # ignore them
+        pytest.param(
+            _EDGE_BASE + [("cur", None), ("ref", None), ("ref", None)],
+            11.67688, 0.478818, 1.0,
+            (0.5, 0.109375, 1.035714, 4, 4), id="null_bins",
+        ),
+        pytest.param(
+            [r for r in _EDGE_BASE if r[0] == "cur"], 12.775752, 0.5, None,
+            (None, None, None, 4, 0), id="no_reference",
+        ),
+        pytest.param(
+            [r for r in _EDGE_BASE if r[0] == "ref"], None, None, None, None,
+            id="reference_only",
+        ),
+        # bins 1-8 are empty in both folds: only W1's dense range
+        # sees them
+        pytest.param(
+            [("ref", 0), ("ref", 9), ("cur", 0), ("cur", 0), ("cur", 9)],
+            0.115525, 0.020721, 1.5,
+            (0.166667, 0.016667, 0.083333, 3, 2), id="empty_interior",
+        ),
+    ],
+)
+def test_drift_lens_edges(spark, rows, psi, jsd, w1, cdf):
+    """One (fold, bin) table through every binned lens; ``None`` is
+    "no output row" (inside ``cdf``: a NULL statistic)."""
+    from kkbox_churn_prediction_spark.operators.psi import (
+        anderson_darling_from_bins,
+        cvm_from_bins,
+        jsd_from_bins,
+        ks_from_bins,
+        wasserstein_from_bins,
+    )
+
+    df = spark.createDataFrame(rows, "fold string, bin int")
+
+    def by_fold(out):
+        return {r[0]: tuple(r[1:]) for r in out.collect()}
+
+    def one(v):
+        return {} if v is None else {"cur": (v,)}
+
+    assert by_fold(psi_from_bins(df, "fold", "bin", "ref")) == one(psi)
+    assert by_fold(jsd_from_bins(df, "fold", "bin", "ref")) == one(jsd)
+    assert by_fold(wasserstein_from_bins(df, "fold", "bin", "ref", 1.0)) == one(w1)
+    lenses = (ks_from_bins, cvm_from_bins, anderson_darling_from_bins)
+    for i, lens in enumerate(lenses):
+        want = {} if cdf is None else {"cur": (cdf[i], *cdf[3:])}
+        assert by_fold(lens(df, "fold", "bin", "ref")) == want, lens.__name__
+
+
 def test_transition_backtest_golden(spark):
     from datetime import datetime, timedelta
 

@@ -1418,3 +1418,22 @@ def test_ks_pair_matrix_identical_and_shifted(spark):
     assert got[("s1", "s3")] == 1.0  # fully separated CDFs
     assert got[("s2", "s3")] == 1.0
     assert len(got) == 3  # unordered pairs only
+
+
+def test_ks_pair_matrix_null_only_group(spark):
+    """A group whose rows all have NULL bins has n = 0 and KS NULL
+    against every other group (not DIVIDE_BY_ZERO); the other pairs
+    are unchanged."""
+    from kkbox_churn_prediction_spark.operators.psi import ks_pair_matrix
+
+    df = spark.createDataFrame(
+        [("a", 0), ("a", 1), ("b", 1), ("b", 2), ("c", None)],
+        "source string, bin int",
+    )
+    got = {(r["group_a"], r["group_b"]): (r["ks"], r["n_a"], r["n_b"])
+           for r in ks_pair_matrix(df, "source", "bin").collect()}
+    assert got == {
+        ("a", "b"): (0.5, 2, 2),
+        ("a", "c"): (None, 2, 0),
+        ("b", "c"): (None, 2, 0),
+    }
