@@ -18,8 +18,10 @@ Physical strategy at 100 TB:
 - The cutoff set per run is a handful of fold boundaries → broadcast
   the *cutoff list* (not the entity grid) and replicate turns via a
   broadcast nested-loop on the pure range predicate. No shuffle to
-  produce the joined stream; the single shuffle is the groupBy
-  (conv_id, cutoff_ts) partial+final hash aggregate that follows.
+  produce the joined stream; its one big shuffle is the map-side
+  partials of the two-level aggregate that follows
+  (``horizons.multi_horizon_aggregate``); the regroup per (conv_id,
+  cutoff_ts) and the grid joins move collapsed rows only.
 - If cutoffs are per-entity (arbitrary grid), fall back to an equi
   join on conv_id with the range predicate in the join condition —
   Catalyst runs it as sort-merge; co-locate with

@@ -4,10 +4,11 @@ The reference recomputes the same aggregates once per lookback window
 (90/60/30/14/7d) as five separate GROUP BY CTEs over five filtered
 scans (``features/features_comprehensive.sql:97-144`` tx,
 ``:225-296`` logs). That is 5× the scan + 5× the shuffle. Here the
-as-of-joined stream is aggregated ONCE with conditional aggregates —
-``sum(when(days_ago <= K, x))`` per horizon K — so Catalyst emits one
-partial+final hash aggregate regardless of horizon count (SURVEY §4
-"scan sharing" restructure).
+as-of-joined stream is read ONCE with conditional aggregates —
+``sum(when(days_ago <= K, x))`` per horizon K — in one two-level
+aggregate whatever the horizon count (SURVEY §4 "scan sharing"
+restructure): the big shuffle carries map-side partials, the second
+level regroups the already-collapsed rows.
 """
 
 from __future__ import annotations
@@ -50,36 +51,14 @@ DEFAULT_SPECS: tuple[FeatureSpec, ...] = (
     FeatureSpec("text_len_avg", "avg", "text_len", fill=0.0, round_to=4),
 )
 
+# whole-superset-window aggregates (``full_window``), suffixed ``_full``
+_FULL_WINDOW_SPECS = (
+    FeatureSpec("turn_cnt", "count"),
+    FeatureSpec("text_len_sum", "sum", "text_len"),
+)
 
-def _window_flag(horizon_days: int) -> Column:
-    # sub-window predicate P4, as a conditional instead of a re-scan
-    return F.col("ts") >= F.col("cutoff_ts") - F.expr(f"INTERVAL {horizon_days} DAYS")
-
-
-def _agg_for(spec: FeatureSpec, horizon_days: int) -> Column:
-    inside = _window_flag(horizon_days)
-    x = F.expr(spec.expr) if spec.expr is not None else F.lit(1)
-    guarded = F.when(inside, x)
-    name = f"{spec.name}_{horizon_days}d"
-    if spec.agg == "count":
-        col = F.count(guarded)
-    elif spec.agg == "sum":
-        col = F.sum(guarded)
-    elif spec.agg == "avg":
-        col = F.avg(guarded)
-    elif spec.agg == "min":
-        col = F.min(guarded)
-    elif spec.agg == "max":
-        col = F.max(guarded)
-    elif spec.agg == "countDistinct":
-        col = F.countDistinct(guarded)
-    else:  # pragma: no cover
-        raise ValueError(f"unknown agg {spec.agg}")
-    if spec.round_to is not None:
-        col = F.round(col, spec.round_to)
-    if spec.fill is not None:
-        col = F.coalesce(col, F.lit(spec.fill))
-    return col.alias(name)
+def _input(spec: FeatureSpec) -> Column:
+    return F.expr(spec.expr) if spec.expr is not None else F.lit(1)
 
 
 def multi_horizon_aggregate(
@@ -95,72 +74,78 @@ def multi_horizon_aggregate(
     the per-horizon predicates only narrow it. Emits one column per
     (spec × horizon), plus recency aggregates (A8):
     ``micros_since_last_turn`` (exact integer — avoids float-epoch
-    drift between engines).
+    drift between engines). ``full_window=True`` adds whole-window
+    ``turn_cnt_full`` / ``text_len_sum_full`` — meaningful when the
+    join bound is WIDER than max(horizons), e.g. the expanding-fold
+    policy (``src/temporal_cv.py:110-150`` "train on all prior").
 
-    COUNT(DISTINCT) is NOT planned as Catalyst's Expand (which
-    multiplies every input row by the number of distinct-aggs — a 4×
-    stream amplification with 3 horizons): it is restructured as a
-    dedup aggregate per (keys, value) keeping max(ts), from which
-    per-horizon presence (max ts ≥ cutoff−K, since every ts < cutoff)
-    gives exact distinct counts — two slim hash aggs + a co-partitioned
-    join instead of one fat Expand (skew-safe for the same reason as
-    ``operators.skew.two_phase_count_distinct``).
+    One two-level aggregate, no join. Level 1 groups by (conv_id,
+    cutoff_ts, ``_v``), ``_v`` being the one COUNT(DISTINCT) input (a
+    NULL literal when there is none), and carries decomposable
+    partials per spec×horizon (count, sum, min, max; avg as sum and
+    count) plus ``_max_us``, the latest turn of the group. Level 2
+    groups by (conv_id, cutoff_ts) and merges them: a value is in
+    horizon K iff its latest turn is (every turn is before the
+    cutoff), so the distinct count is ``count(_v IS NOT NULL AND
+    _max_us >= cutoff−K)``, and ``max(_max_us)`` gives the recency.
+    No Catalyst Expand (one copy of each input row per distinct-agg)
+    and no dedup branch joined back; skew-safe for the same reason as
+    ``operators.skew.two_phase_count_distinct``.
+
+    More than one distinct input expression raises ``ValueError``.
     """
-    plain = [s for s in specs if s.agg != "countDistinct"]
-    distinct = [s for s in specs if s.agg == "countDistinct"]
+    distinct = {s.expr for s in specs if s.agg == "countDistinct"}
+    if len(distinct) > 1:
+        raise ValueError(f"at most one countDistinct expression: {sorted(map(str, distinct))}")
+    v = _input(next(s for s in specs if s.agg == "countDistinct")) if distinct else F.lit(None)
+    cutoff_us = F.unix_micros(F.col("cutoff_ts"))
+    partials = [F.max(F.unix_micros(F.col("ts"))).alias("_max_us")]
 
-    aggs: list[Column] = []
-    for spec in plain:
-        for k in horizons_days:
-            aggs.append(_agg_for(spec, k))
-    if full_window:
-        # whole-superset-window aggregates — meaningful when the join
-        # bound is WIDER than max(horizons), e.g. the expanding-fold
-        # policy where each fold's lookback reaches to the data start
-        # (src/temporal_cv.py:110-150 "train on all prior"). Free:
-        # same single hash aggregate, two more columns.
-        aggs.append(F.coalesce(F.count(F.lit(1)), F.lit(0)).alias("turn_cnt_full"))
-        aggs.append(
-            F.coalesce(F.sum(F.col("text_len")), F.lit(0)).alias("text_len_sum_full")
-        )
-    aggs.append(
-        F.coalesce(
-            F.unix_micros(F.col("cutoff_ts")) - F.max(F.unix_micros(F.col("ts"))),
-            F.lit(-1),
-        ).alias("micros_since_last_turn")
-    )
-    out = joined.groupBy("conv_id", "cutoff_ts").agg(*aggs)
+    def partial(col: Column) -> Column:
+        name = f"_p{len(partials)}"
+        partials.append(col.alias(name))
+        return F.col(name)
 
-    for spec in distinct:
-        val = F.expr(spec.expr) if spec.expr is not None else F.lit(1)
-        dedup = (
-            joined.where(val.isNotNull())
-            .groupBy("conv_id", "cutoff_ts", val.alias("_v"))
-            .agg(F.max(F.unix_micros(F.col("ts"))).alias("_max_us"))
+    def merged(spec: FeatureSpec, k: int | None, name: str) -> Column:
+        # k=None: the whole superset window
+        inside = F.lit(True) if k is None else (
+            F.col("ts") >= F.col("cutoff_ts") - F.expr(f"INTERVAL {k} DAYS")
         )
-        horizon_us = {
-            k: F.unix_micros(F.col("cutoff_ts")) - F.lit(int(k) * 86400 * 1_000_000)
-            for k in horizons_days
-        }
-        cnt_aggs = [
-            F.coalesce(
-                F.count(F.when(F.col("_max_us") >= horizon_us[k], 1)),
-                F.lit(spec.fill if spec.fill is not None else 0),
-            ).alias(f"{spec.name}_{k}d")
-            for k in horizons_days
-        ]
-        cnts = dedup.groupBy("conv_id", "cutoff_ts").agg(*cnt_aggs)
-        out = out.join(cnts, ["conv_id", "cutoff_ts"], "left")
+        x = F.when(inside, _input(spec))
+        if spec.agg == "count":
+            # coalesce: non-nullable, like count() itself
+            col = F.coalesce(F.sum(partial(F.count(x))), F.lit(0))
+        elif spec.agg == "sum":
+            col = F.sum(partial(F.sum(x)))
+        elif spec.agg == "avg":
+            col = F.try_divide(F.sum(partial(F.sum(x))), F.sum(partial(F.count(x))))
+        elif spec.agg == "min":
+            col = F.min(partial(F.min(x)))
+        elif spec.agg == "max":
+            col = F.max(partial(F.max(x)))
+        elif spec.agg == "countDistinct":
+            recent = F.col("_max_us") >= cutoff_us - F.lit(int(k) * 86400 * 1_000_000)
+            col = F.count(F.when(F.col("_v").isNotNull() & recent, 1))
+        else:
+            raise ValueError(f"unknown agg {spec.agg}")
+        if spec.round_to is not None:
+            col = F.round(col, spec.round_to)
         if spec.fill is not None:
-            out = out.fillna({f"{spec.name}_{k}d": spec.fill for k in horizons_days})
-    # restore the declared spec×horizon column order
-    ordered = ["conv_id", "cutoff_ts"]
-    for spec in specs:
-        ordered += [f"{spec.name}_{k}d" for k in horizons_days]
+            col = F.coalesce(col, F.lit(spec.fill))
+        return col.alias(name)
+
+    out = [merged(s, k, f"{s.name}_{k}d") for s in specs for k in horizons_days]
     if full_window:
-        ordered += ["turn_cnt_full", "text_len_sum_full"]
-    ordered.append("micros_since_last_turn")
-    return out.select(*ordered)
+        out += [merged(s, None, f"{s.name}_full") for s in _FULL_WINDOW_SPECS]
+    out.append(
+        F.coalesce(cutoff_us - F.max("_max_us"), F.lit(-1)).alias("micros_since_last_turn")
+    )
+    return (
+        joined.groupBy("conv_id", "cutoff_ts", v.alias("_v"))
+        .agg(*partials)
+        .groupBy("conv_id", "cutoff_ts")
+        .agg(*out)
+    )
 
 
 # expected Spark output dtype per aggregation kind (over the BIGINT /
@@ -296,16 +281,10 @@ def attach_grid_defaults(
     """Left-join features onto the full entity×cutoff grid so entities
     with zero in-window turns keep default rows (J2/J6 + COALESCE
     defaults, ``features/features_comprehensive.sql:351-635``)."""
-    out = grid.join(features, ["conv_id", "cutoff_ts"], "left")
-    fills = {}
-    for spec in specs:
-        for k in horizons_days:
-            if spec.fill is not None:
-                fills[f"{spec.name}_{k}d"] = spec.fill
-    out = out.fillna(fills)
-    for c in ("turn_cnt_full", "text_len_sum_full"):
-        if c in out.columns:
-            out = out.fillna({c: 0})
-    if "micros_since_last_turn" in out.columns:
-        out = out.fillna({"micros_since_last_turn": -1})
-    return out
+    fills = {
+        f"{s.name}_{k}d": s.fill for s in specs for k in horizons_days if s.fill is not None
+    }
+    for c, v in (("turn_cnt_full", 0), ("text_len_sum_full", 0), ("micros_since_last_turn", -1)):
+        if c in features.columns:
+            fills[c] = v
+    return grid.join(features, ["conv_id", "cutoff_ts"], "left").fillna(fills)

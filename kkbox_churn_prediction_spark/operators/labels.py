@@ -12,10 +12,12 @@ The reference implements this as a self theta-join
 (``t2.transaction_date > expire AND ...``, J4). Two Spark-first
 realizations, neither a theta join:
 
-- :func:`entity_labels`: qualifying future turns joined to the tiny
+- :func:`attach_labels`: qualifying future turns joined to the tiny
   broadcast cutoff list on the bounded range predicate, then a
   min-aggregate (:func:`first_qualifying_after`, shared with
-  ``operators/survival.py``), left-joined onto ``asof.cutoff_grid``.
+  ``operators/survival.py``), left-joined onto any frame keyed by
+  (conv_id, cutoff_ts) — ``asof.cutoff_grid`` in
+  :func:`entity_labels`, the feature matrix in ``plans.folds``.
 - :func:`time_to_next_qualifying_turn`: per-turn forward-looking
   window ``min(case when qualifying then ts end) over (rows between
   1 following and unbounded following)`` — pure window op, zero join
@@ -56,6 +58,33 @@ def first_qualifying_after(
     )
 
 
+def attach_labels(
+    frame: DataFrame,
+    turns: DataFrame,
+    cutoffs: DataFrame,
+    horizon_days: int,
+    qualifying: Column | str = "role = 'user'",
+    *,
+    inclusive: bool = True,
+) -> DataFrame:
+    """Append ``is_churn`` — 1 if NO qualifying turn lands in (cutoff,
+    cutoff+horizon] (inclusive) / (cutoff, cutoff+horizon) (strict) —
+    and ``micros_to_next_qualifying`` (-1 if none) to ``frame``, any
+    frame keyed by (conv_id, cutoff_ts): one left join of the sparse
+    :func:`first_qualifying_after` minimum, so ``frame`` keeps its
+    rows and partitioning."""
+    future = first_qualifying_after(
+        turns, cutoffs, horizon_days, qualifying, inclusive=inclusive
+    )
+    return frame.join(future, ["conv_id", "cutoff_ts"], "left").select(
+        *frame.columns,
+        F.when(F.col("_next_us").isNull(), F.lit(1)).otherwise(F.lit(0)).alias("is_churn"),
+        F.coalesce(
+            F.col("_next_us") - F.unix_micros(F.col("cutoff_ts")), F.lit(-1)
+        ).alias("micros_to_next_qualifying"),
+    )
+
+
 def entity_labels(
     turns: DataFrame,
     cutoffs: DataFrame,
@@ -64,22 +93,9 @@ def entity_labels(
     *,
     inclusive: bool = True,
 ) -> DataFrame:
-    """Per (conv_id, cutoff_ts): 1 if NO qualifying turn lands in
-    (cutoff, cutoff+horizon] (inclusive) / (cutoff, cutoff+horizon)
-    (strict). Also emits ``micros_to_next_qualifying`` (-1 if none).
-    """
-    future = first_qualifying_after(
-        turns, cutoffs, horizon_days, qualifying, inclusive=inclusive
-    )
+    """:func:`attach_labels` on the entity×cutoff grid."""
     grid = cutoff_grid(turns, cutoffs)
-    return grid.join(future, ["conv_id", "cutoff_ts"], "left").select(
-        "conv_id",
-        "cutoff_ts",
-        F.when(F.col("_next_us").isNull(), F.lit(1)).otherwise(F.lit(0)).alias("is_churn"),
-        F.coalesce(
-            F.col("_next_us") - F.unix_micros(F.col("cutoff_ts")), F.lit(-1)
-        ).alias("micros_to_next_qualifying"),
-    )
+    return attach_labels(grid, turns, cutoffs, horizon_days, qualifying, inclusive=inclusive)
 
 
 def time_to_next_qualifying_turn(

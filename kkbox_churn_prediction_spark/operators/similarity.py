@@ -1127,7 +1127,10 @@ def lof_scores(
     - ``kdist(b)`` = distance to b's k-th neighbor;
     - ``reach(a,b) = max(dist(a,b), kdist(b))``;
     - ``lrd(a) = k / Σ_b reach(a,b)`` (ε-floored denominator — exact
-      duplicates give zero reach);
+      duplicates give zero reach); cosine distance bounds reach to
+      [0, 2] (a NULL reach drops out of the sum), so lrd ≥ 0.5 and
+      its 1e-6-grid ``_lrd_q`` ≥ 500000 — the lof division below
+      never divides by zero;
     - ``lof(a) = mean_b lrd(b) / lrd(a)``.
 
     Scale shape: built entirely on the kNN edge list (n·k rows). The

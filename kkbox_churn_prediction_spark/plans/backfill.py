@@ -12,20 +12,23 @@ Plan shape (``.explain("formatted")``-verified):
 
   parquet scan (pruned: event cols only, null filters pushed)
     → broadcast nested-loop join on range predicate (no fact shuffle)
-    → ONE partial+final hash aggregate on (conv_id, cutoff_ts)
-    → AQE-sized shuffle → left join onto grid for default rows
+    → ONE two-level hash aggregate: partials per (conv_id, cutoff_ts,
+      distinct value), the one big shuffle; merged per (conv_id,
+      cutoff_ts) over the collapsed rows
+    → left join onto the entity×cutoff grid for default rows
 
 At 10^12 turns: the scan is Iceberg partitioned by days(ts), so the
-lookback predicate prunes partitions; the single shuffle is keyed by
-(conv_id, cutoff_ts) — high cardinality, no hotspots except
-mega-conversations, which AQE skew handling splits (the agg is
-algebraic, so partial aggregation already collapses each mapper's
-slice of a hot key).
+lookback predicate prunes partitions; the big shuffle is keyed by
+(conv_id, cutoff_ts, distinct value) — high cardinality, no hotspots
+except mega-conversations, which AQE skew handling splits (every
+partial is algebraic, so partial aggregation already collapses each
+mapper's slice of a hot key).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from kkbox_churn_prediction_spark.operators.asof import (
     asof_join_broadcast_cutoffs,
@@ -66,13 +69,11 @@ def backfill_features(
     """
     max_h = lookback_days if lookback_days is not None else max(horizons_days)
     # project-before-replicate: the as-of join multiplies every turn by
-    # its qualifying cutoffs (and countDistinct adds an Expand on top),
-    # so each byte carried into the join is amplified ~#cutoffs×#aggs.
+    # its qualifying cutoffs, so each byte carried into the join is
+    # amplified ~#cutoffs.
     # Reduce text to its length and role to a flag BEFORE the join —
     # at bench scale this cut allocation pressure enough to restore
     # 8→32-core scaling (strings were ~10× the replicated volume).
-    from pyspark.sql import functions as F
-
     narrow = conversations.select(
         "conv_id",
         "ts",

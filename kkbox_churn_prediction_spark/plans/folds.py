@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kkbox_churn_prediction_spark.operators.horizons import DEFAULT_SPECS
-from kkbox_churn_prediction_spark.operators.labels import entity_labels
+from kkbox_churn_prediction_spark.operators.labels import attach_labels
 from kkbox_churn_prediction_spark.plans.backfill import backfill_features
 
 
@@ -97,7 +97,8 @@ def backtest(
     """Features as-of each fold cutoff + next-event label AFTER it —
     the (feature-cutoff, label-window) pair of the reference's
     ``cutoff_YYYY-MM:expire_YYYY-MM`` windows (``backtest.py:8-16``).
-    Inner join features⋈labels on (conv_id, cutoff_ts) = J5.
+    The labels are left-joined onto the feature matrix's own
+    entity×cutoff grid (J5), so the grid is built once.
 
     ``lookback_policy="expanding"`` widens each fold's feature window
     back to the earliest fold's window start (per-fold
@@ -119,8 +120,7 @@ def backtest(
         feats = backfill_features(turns, cutoffs, horizons_days, DEFAULT_SPECS)
     else:
         raise ValueError(f"unknown lookback_policy {lookback_policy!r}")
-    labels = entity_labels(turns, cutoffs, label_horizon_days)
-    out = feats.join(labels, ["conv_id", "cutoff_ts"], "inner")
+    out = attach_labels(feats, turns, cutoffs, label_horizon_days)
     return out.join(
         F.broadcast(folds.select("fold", "cutoff_ts")), ["cutoff_ts"], "inner"
     )

@@ -23,6 +23,10 @@ from kkbox_churn_prediction_spark.operators.asof import (
     cutoff_grid,
 )
 from kkbox_churn_prediction_spark.operators.decay import decayed_counts
+from kkbox_churn_prediction_spark.operators.horizons import (
+    FeatureSpec,
+    multi_horizon_aggregate,
+)
 from kkbox_churn_prediction_spark.operators.labels import entity_labels
 from kkbox_churn_prediction_spark.operators.survival import (
     competing_risks_labels,
@@ -98,6 +102,61 @@ def test_partition_count_invariance(trap):
     out8 = backfill_features(turns.repartition(8), cutoffs).orderBy("conv_id", "cutoff_ts")
     p1, p8 = out1.toPandas(), out8.toPandas()
     pd.testing.assert_frame_equal(p1, p8, check_exact=False, rtol=1e-12)
+
+
+@pytest.fixture(scope="module")
+def trap_stream(trap):
+    """The leak trap's as-of stream, over the narrow projection."""
+    turns, cutoffs, _ = trap
+    narrow = turns.select(
+        "conv_id",
+        "ts",
+        F.expr("CAST(length(text) AS BIGINT)").alias("text_len"),
+        "tool",
+    )
+    return asof_join_broadcast_cutoffs(narrow, cutoffs, 7)
+
+
+@pytest.mark.parametrize(
+    "spec",
+    [
+        FeatureSpec("n", "count"),
+        FeatureSpec("s", "sum", "text_len"),
+        FeatureSpec("a", "avg", "text_len", fill=0.0, round_to=4),
+        FeatureSpec("lo", "min", "text_len"),
+        FeatureSpec("hi", "max", "text_len"),
+        FeatureSpec("d", "countDistinct", "tool"),
+    ],
+    ids=lambda s: s.agg,
+)
+def test_two_level_aggregate_matches_one_groupby(trap_stream, spec):
+    """Each agg kind's partial/merge pair (five of the six are spec
+    tuples with no countDistinct, so `_v` is the NULL literal) equals
+    a direct single-level groupBy, schema included."""
+    horizons = (1, 3, 7)
+    x = F.expr(spec.expr) if spec.expr is not None else F.lit(1)
+    cols = []
+    for k in horizons:
+        inside = F.col("ts") >= F.col("cutoff_ts") - F.expr(f"INTERVAL {k} DAYS")
+        c = getattr(F, spec.agg)(F.when(inside, x))  # F.count, ..., F.countDistinct
+        if spec.round_to is not None:
+            c = F.round(c, spec.round_to)
+        cols.append(F.coalesce(c, F.lit(spec.fill)).alias(f"{spec.name}_{k}d"))
+    last = F.unix_micros(F.col("cutoff_ts")) - F.max(F.unix_micros(F.col("ts")))
+    cols.append(F.coalesce(last, F.lit(-1)).alias("micros_since_last_turn"))
+    want = trap_stream.groupBy("conv_id", "cutoff_ts").agg(*cols)
+    got = multi_horizon_aggregate(trap_stream, horizons, (spec,))
+    assert got.schema == want.schema
+    assert sorted(got.collect()) == sorted(want.collect())
+
+
+def test_two_distinct_expressions_raise(trap_stream):
+    specs = (
+        FeatureSpec("d_tool", "countDistinct", "tool"),
+        FeatureSpec("d_len", "countDistinct", "text_len"),
+    )
+    with pytest.raises(ValueError, match="countDistinct"):
+        multi_horizon_aggregate(trap_stream, (1, 3, 7), specs)
 
 
 def test_asof_forward_nearest_golden(spark):

@@ -37,12 +37,29 @@ def _final_plan(spark, name):
     return plan.split("== Initial Plan ==")[0]
 
 
+_JOINS = ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin",
+          "BroadcastNestedLoopJoin", "CartesianProduct")
+
+
+def _n_joins(plan):
+    return sum(plan.count(j) for j in _JOINS)
+
+
 def test_flagship_has_no_expand_and_no_global_sort(spark):
-    """asof_features: count-distinct stays Expand-free (A3 rewrite)
-    and nothing sorts a single partition."""
+    """asof_features: count-distinct stays Expand-free (A3 rewrite),
+    nothing sorts a single partition, and the distinct count is part
+    of the one two-level aggregate (grid, as-of stream, grid
+    defaults: 3 joins, no dedup branch joined back). backtest_folds
+    adds only the sparse label join and the fold tag onto the same
+    grid: no second grid, no features⋈labels join."""
     plan = _plan(spark, "asof_features")
     assert "Expand" not in plan
     assert "Exchange SinglePartition" not in plan
+    assert _n_joins(plan) <= 3
+    plan = _plan(spark, "backtest_folds")
+    assert plan.count("Scan parquet") <= 7
+    assert _n_joins(plan) <= 6
+    assert plan.count("SortMergeJoin") <= 2
 
 
 def test_quintile_stats_has_no_window_sort(spark):
