@@ -15,9 +15,10 @@ default to data-derived weekly boundaries; pass ``--cutoffs
 2024-01-08,2024-01-15`` for explicit fold cutoffs (the reference's
 ``cutoff_YYYY-MM`` windows, ``src/backtest.py:290-293``).
 
-The run is checkpointed through ``plans.manifest`` (bucket-granular; a
-rerun with the same ``--run-id`` resumes) and finishes with the
-leakage assert-zero gate.
+The run is checkpointed through ``plans.manifest`` (``bucket=K/``
+partitions staged by one write; a rerun with the same ``--run-id``
+resumes from the committed buckets) and finishes with the leakage
+assert-zero gate.
 """
 
 from __future__ import annotations
@@ -63,7 +64,11 @@ def main(argv: list[str] | None = None) -> None:
             F.col("cutoff_str").cast("timestamp").alias("cutoff_ts")
         )
     else:
-        cutoffs = weekly_cutoffs(turns)
+        # collected once: as a lazy frame the cutoff list would be rebuilt
+        # from a fact scan by the staging write and again by the gate
+        cutoffs = spark.createDataFrame(
+            weekly_cutoffs(turns).collect(), "cutoff_ts timestamp"
+        )
 
     stats = resumable_backfill(
         spark,

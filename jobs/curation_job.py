@@ -10,12 +10,12 @@ Ships like the feature backfill::
         --keep-lang en --min-quality 0.666667 \
         --run-id c1 --buckets 8
 
-The per-document verdict table writes bucket-by-bucket through the
-same checkpoint manifest as the backfill (run header with input
-fingerprint + params; resume refuses changed input; completed
-buckets skip) — a killed 100 TB corpus build loses at most one
-bucket. The job ends with the curation report printed as the run
-audit.
+The per-document verdict table is written as ``bucket=K/``
+partitions through the same checkpoint manifest as the backfill (run
+header with input fingerprint + params; resume refuses changed input;
+completed buckets skip) — a kill loses the run's staged write;
+committed buckets are kept. The job ends with the curation report
+printed as the run audit.
 """
 
 from __future__ import annotations

@@ -46,12 +46,6 @@ def bpe_ish_token_count(col: Column) -> Column:
     return F.size(pieces).cast("bigint")
 
 
-def stopword_hits(col: Column, words: tuple[str, ...]) -> Column:
-    toks = tokens(normalize_text(col))
-    arr = F.array(*[F.lit(w) for w in words])
-    return F.size(F.filter(toks, lambda t: F.array_contains(arr, t))).cast("bigint")
-
-
 def lang_id(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Predicted language = argmax stopword-evidence ratio (ties →
     lexicographically first language; 'und' = undetermined when no

@@ -17,12 +17,14 @@ Plan shape (``.explain("formatted")``-verified):
       cutoff_ts) over the collapsed rows
     → left join onto the entity×cutoff grid for default rows
 
-At 10^12 turns: the scan is Iceberg partitioned by days(ts), so the
-lookback predicate prunes partitions; the big shuffle is keyed by
-(conv_id, cutoff_ts, distinct value) — high cardinality, no hotspots
-except mega-conversations, which AQE skew handling splits (every
-partial is algebraic, so partial aggregation already collapses each
-mapper's slice of a hot key).
+At 10^12 turns: the scan is meant to be Iceberg partitioned by
+days(ts), but no plan prunes partitions by the lookback yet — Spark
+derives no scan filter from the range condition of a broadcast
+nested-loop join, so every fact scan here is unbounded in ts. The
+big shuffle is keyed by (conv_id, cutoff_ts, distinct value) — high
+cardinality, no hotspots except mega-conversations, which AQE skew
+handling splits (every partial is algebraic, so partial aggregation
+already collapses each mapper's slice of a hot key).
 """
 
 from __future__ import annotations

@@ -8,16 +8,18 @@ buckets on ``manifest.bucket_of`` (``pmod(hash(id), n)`` over the
 stored id type), so the affected bucket set comes from hashing the
 (tiny) id list, cast to the layout's id type, with the SAME
 expression, and every other bucket's files are untouched (their row
-counts and mtimes stay valid). Each rewritten bucket anti-joins the
-broadcast id list and recommits its new row count to the manifest,
-so lineage keeps matching the data after deletions.
+counts and mtimes stay valid). The affected buckets are read
+together, anti-joined with the broadcast id list and staged by one
+write, which also counts each bucket's rows before and after; each
+bucket then recommits its new row count to the manifest, so lineage
+keeps matching the data after deletions.
 
 Rewritten buckets go through the one commit protocol
-(``plans.manifest.publish``): staged under ``_staging/``, counted,
-swapped in, recorded — a crash before the swap leaves the old bucket
-live and readers never see the staged copy. On an object store, swap
-the rename for the table format's atomic commit (Iceberg
-delete-files do this natively when the runtime has the jar —
+(``plans.manifest.write_partitions``): staged under ``_staging/`` and
+counted in one pass, swapped in, recorded — a crash before the swap
+leaves the old bucket live and readers never see the staged copy. On
+an object store, swap the rename for the table format's atomic commit
+(Iceberg delete-files do this natively when the runtime has the jar —
 ``sources/io.py``).
 """
 
@@ -28,7 +30,12 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kkbox_churn_prediction_spark.plans.manifest import bucket_of, open_run, write_partition
+from kkbox_churn_prediction_spark.plans.manifest import (
+    bucket_of,
+    observe_rows,
+    open_run,
+    write_partitions,
+)
 
 
 def _ids_frame(spark: SparkSession, ids: list, col: str, id_type: str) -> DataFrame:
@@ -68,24 +75,30 @@ def forget_entities(
     {"buckets_rewritten": int, "rows_deleted": int}."""
     out = Path(data_dir)
     manifest, _ = open_run(out, run_id, params={"op": "forget", "n_ids": len(ids)})
-    rewritten = deleted = 0
     if not any(out.glob("bucket=*")):
-        return {"buckets_rewritten": rewritten, "rows_deleted": deleted}
+        return {"buckets_rewritten": 0, "rows_deleted": 0}
     id_type = (
         spark.read.parquet(str(out / "bucket=*")).schema[id_col].dataType.simpleString()
     )
+    affected = [
+        b
+        for b in sorted(buckets_for_ids(spark, ids, n_buckets, id_type))
+        if (out / f"bucket={b}").exists()
+    ]
+    if not affected:
+        return {"buckets_rewritten": 0, "rows_deleted": 0}
+    # basePath turns each dir's bucket=K into the bucket column
+    cur = spark.read.option("basePath", str(out)).parquet(
+        *(str(out / f"bucket={b}") for b in affected)
+    )
+    cur, before = observe_rows(cur, "bucket", affected)
     ids_df = _ids_frame(spark, ids, id_col, id_type)
-    for b in sorted(buckets_for_ids(spark, ids, n_buckets, id_type)):
-        bucket_dir = out / f"bucket={b}"
-        if not bucket_dir.exists():
-            continue
-        cur = spark.read.parquet(str(bucket_dir))
-        before = cur.count()
-        kept = cur.join(F.broadcast(ids_df), id_col, "left_anti")
-        after = write_partition(kept, manifest, run_id, b, bucket_dir)
-        rewritten += 1
-        deleted += before - after
-    return {"buckets_rewritten": rewritten, "rows_deleted": deleted}
+    kept = cur.join(F.broadcast(ids_df), id_col, "left_anti")
+    after = write_partitions(kept, manifest, run_id, out, "bucket", affected)
+    return {
+        "buckets_rewritten": len(affected),
+        "rows_deleted": sum(before.get.values()) - after,
+    }
 
 
 def compact_buckets(
@@ -99,8 +112,8 @@ def compact_buckets(
     """Small-file compaction: rewrite any bucket whose parquet file
     count exceeds ``min_files`` down to ``target_files_per_bucket``
     files (coalesce — no shuffle, a pure file-merge read+write),
-    committed like deletion, with the staged row count checked
-    against the live bucket's before the swap.
+    committed like deletion, with the row count observed in the
+    write checked against the live bucket's before the swap.
     Incremental writers (the streaming sink, repeated small
     backfills) accrete files that degrade scan planning at 100 TB;
     compaction restores the layout without touching row content.
@@ -113,14 +126,9 @@ def compact_buckets(
         n_files = len(list(bucket_dir.glob("*.parquet")))
         if n_files <= max(int(min_files) - 1, int(target_files_per_bucket)):
             continue
+        b = int(bucket_dir.name.split("=")[1])
         cur = spark.read.parquet(str(bucket_dir))
-        write_partition(
-            cur.coalesce(int(target_files_per_bucket)),
-            manifest,
-            run_id,
-            int(bucket_dir.name.split("=")[1]),
-            bucket_dir,
-            expect_rows=cur.count(),
-        )
+        merged = cur.coalesce(int(target_files_per_bucket)).withColumn("bucket", F.lit(b))
+        write_partitions(merged, manifest, run_id, out, "bucket", [b], expect_rows=cur.count())
         compacted += 1
     return {"buckets_compacted": compacted}

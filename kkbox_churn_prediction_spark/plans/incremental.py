@@ -10,11 +10,12 @@ set, and runs the flagship backfill restricted to the new cutoffs —
 reusing the exact same leak-safe plan, just with a smaller broadcast
 cutoff list. Output lands as ``data/cutoff_key=<key>/`` partitions,
 so downstream readers partition-prune by fold. All new cutoffs are
-written by ONE ``partitionBy`` job into staging, then each partition
-is swapped in and committed through ``plans.manifest.publish`` (the
-one commit protocol): a re-run after a crash re-computes only
-uncommitted cutoffs, and completed cutoffs' files are never touched,
-which also keeps their manifest lineage valid.
+written by ONE ``partitionBy`` job into staging, which also counts
+each cutoff's rows; each partition is then swapped in and committed
+(``plans.manifest.write_partitions``, the one commit protocol): a
+re-run after a crash re-computes only uncommitted cutoffs, and
+completed cutoffs' files are never touched, which also keeps their
+manifest lineage valid.
 
 Late-arriving turns for an ALREADY-COMMITTED cutoff do not silently
 mutate it — exactly the batch leak-guard's contract (a cutoff's
@@ -30,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kkbox_churn_prediction_spark.plans.backfill import backfill_features
-from kkbox_churn_prediction_spark.plans.manifest import STAGING, open_run, publish
+from kkbox_churn_prediction_spark.plans.manifest import open_run, write_partitions
 
 
 def incremental_backfill(
@@ -47,9 +48,9 @@ def incremental_backfill(
     {"cutoffs_run": int, "cutoffs_skipped": int, "rows": int}."""
     manifest, done = open_run(out_dir, run_id, params={"op": "incremental"})
 
-    all_cutoffs = [
-        r["cutoff_ts"] for r in cutoffs.select("cutoff_ts").distinct().collect()
-    ]
+    # the cutoff list is small, so it is deduplicated here: one job,
+    # where a Spark distinct adds a shuffle and a second job
+    all_cutoffs = {r["cutoff_ts"] for r in cutoffs.select("cutoff_ts").collect()}
 
     def key(c) -> str:  # filesystem-safe (no colons -> no URL-escaping)
         return c.strftime("%Y%m%dT%H%M%S")
@@ -67,13 +68,11 @@ def incremental_backfill(
     ).withColumn(
         "cutoff_key", F.date_format("cutoff_ts", "yyyyMMdd'T'HHmmss")
     )
-    data = Path(out_dir) / "data"
     # ONE job stages all new cutoffs as partitions; each is then
     # swapped in and committed on its own, so committed cutoffs' files
     # stay untouched and a crash re-runs only uncommitted cutoffs
-    feats.write.mode("overwrite").partitionBy("cutoff_key").parquet(str(data / STAGING))
-    rows = 0
-    for c in new:
-        k = key(c)
-        rows += publish(spark, manifest, run_id, k, data / f"cutoff_key={k}")
+    data = Path(out_dir) / "data"
+    rows = write_partitions(
+        feats, manifest, run_id, data, "cutoff_key", [key(c) for c in new]
+    )
     return {"cutoffs_run": len(new), "cutoffs_skipped": skipped, "rows": rows}

@@ -6,23 +6,25 @@ run.json with ts/seed/params/metrics per run) to PARTITION
 granularity, in the mold of Structured Streaming's idempotent-sink
 discipline. :func:`open_run` writes a run header (input fingerprint +
 params) and refuses to resume a run whose input changed.
-:func:`publish` makes one partition visible: the writer stages it in
-``<parent>/_staging/<name>`` (the leading ``_`` hides it from Spark's
-file listing and ``bucket=*`` globs), then its rows are counted, the
-live ``<parent>/<name>`` is replaced (rmtree, rename) and
+:func:`write_partitions` stages every pending partition of a frame in
+ONE ``partitionBy`` write to ``<parent>/_staging/<col>=<key>`` (the
+leading ``_`` hides it from Spark's file listing and ``bucket=*``
+globs), counting each key's rows in that same pass (an
+``Observation``). :func:`publish` then makes one partition visible:
+the live ``<parent>/<col>=<key>`` is replaced (rmtree, rename) and
 ``(run_id, partition_key, row_count, status, completed_at)`` is
-appended to ``_manifest.jsonl``. A key with a commit row is DONE; on
-restart done keys skip and the rest is staged and swapped again, so
-resume is idempotent (kill/restart tests in
+appended to ``_manifest.jsonl``; nothing is read back. A key with a
+commit row is DONE; on restart done keys skip and the rest is staged
+and swapped again, so resume is idempotent (kill/restart tests in
 ``tests/test_scale_robustness.py``). Buckets (:func:`resumable_backfill`,
 ``plans.forget``), cutoffs (``plans.incremental``) and micro-batches
 (``streaming.sink``) all commit this way.
 
 With Iceberg the swap + record becomes ``MERGE INTO`` + snapshot ids
 (``input_fingerprint`` then carries the source snapshot id; locally
-:func:`fingerprint_parquet_dir` stands in). At scale each bucket is
-one Spark job over a pruned scan, so a killed 100 TB backfill loses
-at most one bucket of work.
+:func:`fingerprint_parquet_dir` stands in). All pending partitions are
+computed by one Spark job, so a kill loses the run's staged write;
+committed buckets are kept.
 """
 
 from __future__ import annotations
@@ -33,7 +35,7 @@ import time
 from dataclasses import dataclass
 from pathlib import Path
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -139,45 +141,68 @@ def open_run(
 STAGING = "_staging"
 
 
+def observe_rows(df: DataFrame, col: str, keys: list) -> tuple[DataFrame, Observation]:
+    """``df`` with one ``count_if(col = key)`` per key attached; the
+    counts fill in when an action runs the plan, with no job of their
+    own (``Observation.get``, keyed by ``str(key)``)."""
+    obs = Observation()
+    counts = [F.count_if(F.col(col) == F.lit(k)).alias(str(k)) for k in keys]
+    return df.observe(obs, *counts), obs
+
+
 def publish(
-    spark: SparkSession,
     manifest: ManifestStore,
     run_id: str,
     key: int | str,
     dest: Path,
+    rows: int,
     *,
     input_fingerprint: str | None = None,
     expect_rows: int | None = None,
 ) -> int:
-    """Count the staged copy of ``dest`` (``<parent>/_staging/<name>``),
-    swap it in and commit ``(key, row_count)``; returns the row count. ``expect_rows``
-    refuses the swap when the staged count differs (a rewrite that
-    must not change the rows)."""
+    """Swap the staged copy of ``dest`` (``<parent>/_staging/<name>``)
+    in and commit ``(key, rows)``, where ``rows`` is the count observed
+    while staging it; returns ``rows``. ``expect_rows`` refuses the
+    swap when the two differ (a rewrite that must not change the
+    rows)."""
     staged = dest.parent / STAGING / dest.name
-    n = spark.read.parquet(str(staged)).count()
-    if expect_rows is not None and n != expect_rows:
-        raise RuntimeError(f"row-count mismatch staging {dest}: {expect_rows} -> {n}")
+    if expect_rows is not None and rows != expect_rows:
+        raise RuntimeError(f"row-count mismatch staging {dest}: {expect_rows} -> {rows}")
     if dest.exists():
         shutil.rmtree(dest)
     staged.rename(dest)
     if not any(p.is_dir() for p in staged.parent.iterdir()):
         shutil.rmtree(staged.parent)  # nothing staged left but writer markers
-    manifest.commit(run_id, key, n, input_fingerprint)
-    return n
+    manifest.commit(run_id, key, rows, input_fingerprint)
+    return rows
 
 
-def write_partition(
+def write_partitions(
     df: DataFrame,
     manifest: ManifestStore,
     run_id: str,
-    key: int | str,
-    dest: Path,
+    parent: Path,
+    col: str,
+    keys: list,
     **publish_kw,
 ) -> int:
-    """Stage ``df`` as the next version of ``dest``, then
-    :func:`publish` it (``publish_kw`` as there)."""
-    df.write.mode("overwrite").parquet(str(dest.parent / STAGING / dest.name))
-    return publish(df.sparkSession, manifest, run_id, key, dest, **publish_kw)
+    """Stage ``df`` in one write partitioned by ``col`` (every row's
+    ``col`` must be in ``keys``), then :func:`publish`
+    ``<parent>/<col>=<key>`` for each key (``publish_kw`` as there);
+    returns the rows committed. ``partitionBy`` writes no directory
+    for a key without rows, so such a key is staged as an empty,
+    schema-bearing partition and commits like any other."""
+    counted, obs = observe_rows(df, col, keys)
+    counted.write.mode("overwrite").partitionBy(col).parquet(str(parent / STAGING))
+    rows = obs.get
+    for k in keys:
+        if rows[str(k)] == 0:
+            staged = parent / STAGING / f"{col}={k}"
+            df.drop(col).limit(0).write.mode("overwrite").parquet(str(staged))
+    return sum(
+        publish(manifest, run_id, k, parent / f"{col}={k}", rows[str(k)], **publish_kw)
+        for k in keys
+    )
 
 
 def bucket_of(col: str, n_buckets: int) -> Column:
@@ -220,32 +245,42 @@ def resumable_backfill(
     params: dict | None = None,
     bucket_col: str = "conv_id",
 ) -> dict:
-    """Run ``build(spark) -> DataFrame`` bucket-by-bucket with
-    checkpointing. ``build`` must return the FULL output DataFrame
-    including the ``bucket_col`` identity column (conv_id for feature
-    backfills, doc_id for corpus jobs); bucketing is derived, so the
-    split is stable across restarts. ``input_fingerprint`` and
-    ``params`` go to :func:`open_run` (resume refuses changed input).
+    """Write ``build(spark) -> DataFrame`` as ``bucket=K/`` partitions
+    with checkpointing: the buckets not yet committed are staged by
+    one job, then each is published (:func:`write_partitions`), so a
+    kill loses the run's staged write; committed buckets are kept.
+    ``build`` must return the FULL output DataFrame including the
+    ``bucket_col`` identity column (conv_id for feature backfills,
+    doc_id for corpus jobs); bucketing is derived, so the split is
+    stable across restarts. ``input_fingerprint`` and ``params`` go to
+    :func:`open_run` (resume refuses changed input).
 
     Returns {"buckets_run": int, "buckets_skipped": int, "rows": int}.
     """
     manifest, done = open_run(
         out_dir, run_id, input_fingerprint=input_fingerprint, params=params
     )
-    full = build(spark).withColumn("_bucket", bucket_of(bucket_col, n_buckets))
-
-    ran = skipped = total_rows = 0
-    for b in range(n_buckets):
-        if str(b) in done:
-            skipped += 1
-            continue
-        part = full.where(F.col("_bucket") == b).drop("_bucket")
-        dest = Path(out_dir) / f"bucket={b}"
-        total_rows += write_partition(
-            part, manifest, run_id, b, dest, input_fingerprint=input_fingerprint
+    pending = [b for b in range(n_buckets) if str(b) not in done]
+    rows = 0
+    if pending:
+        full = build(spark)
+        if "bucket" in full.columns:
+            raise ValueError("the built frame may not carry a 'bucket' column")
+        bucketed = full.withColumn("bucket", bucket_of(bucket_col, n_buckets))
+        rows = write_partitions(
+            bucketed.where(F.col("bucket").isin(pending)),
+            manifest,
+            run_id,
+            Path(out_dir),
+            "bucket",
+            pending,
+            input_fingerprint=input_fingerprint,
         )
-        ran += 1
-    return {"buckets_run": ran, "buckets_skipped": skipped, "rows": total_rows}
+    return {
+        "buckets_run": len(pending),
+        "buckets_skipped": n_buckets - len(pending),
+        "rows": rows,
+    }
 
 
 def read_backfill_output(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -22,13 +22,3 @@ TRANSCRIPT_SCHEMA = T.StructType(
         T.StructField("ts", T.TimestampType(), True),
     ]
 )
-
-# entity × cutoff grid — the reference's label_index
-# (features/features_comprehensive.sql:12-19): one row per
-# (entity, cutoff timestamp); every feature is computed as-of it.
-CUTOFF_GRID_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("cutoff_ts", T.TimestampType(), False),
-    ]
-)

@@ -22,43 +22,6 @@ def iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
-ICEBERG_DDL = """
-CREATE TABLE IF NOT EXISTS {table} (
-    conv_id STRING NOT NULL,
-    turn_idx INT NOT NULL,
-    role STRING,
-    text STRING,
-    tool STRING,
-    ts TIMESTAMP
-) USING iceberg
-PARTITIONED BY (days(ts), bucket(64, conv_id))
-"""
-
-
-def write_transcripts(df: DataFrame, path_or_table: str) -> None:
-    """Iceberg append when available; else date-partitioned parquet
-    (same pruning behavior for the as-of lookback predicate)."""
-    spark = df.sparkSession
-    if iceberg_available(spark) and "." in path_or_table:
-        df.writeTo(path_or_table).append()
-        return
-    from pyspark.sql import functions as F
-
-    (
-        df.withColumn("_dt", F.to_date("ts"))
-        .write.mode("overwrite")
-        .partitionBy("_dt")
-        .parquet(path_or_table)
-    )
-
-
-def write_features(df: DataFrame, path: str, partition_cols: tuple[str, ...] = ()) -> None:
-    w = df.write.mode("overwrite")
-    if partition_cols:
-        w = w.partitionBy(*partition_cols)
-    w.parquet(path)
-
-
 MERGE_SQL = """
 MERGE INTO {table} t
 USING {source} s

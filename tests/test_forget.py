@@ -70,6 +70,35 @@ def test_compaction_merges_files_preserving_rows(spark, tmp_path):
     assert spark.read.parquet(f"{out}/bucket=*").count() == rows_before
 
 
+def test_compaction_refuses_swap_on_row_count_mismatch(spark, tmp_path, monkeypatch):
+    """Compaction compares the live bucket's ``count()`` with the rows
+    its write observed; when they disagree (here the live count is
+    skewed by one) it refuses the swap and the live bucket keeps its
+    files and rows."""
+    import glob
+
+    from kkbox_churn_prediction_spark.plans.forget import compact_buckets
+    from kkbox_churn_prediction_spark.plans.manifest import ManifestStore
+
+    out = f"{tmp_path}/data"
+    _layout(spark, out, n=40, n_buckets=1)
+    spark.range(40, 46).select(
+        F.concat(F.lit("c"), F.col("id")).alias("conv_id"),
+        (F.col("id") * 3).alias("feature"),
+    ).repartition(3).write.mode("append").parquet(f"{out}/bucket=0")
+    files = {f: os.path.getmtime(f) for f in glob.glob(f"{out}/bucket=0/*.parquet")}
+    rows = sorted(map(tuple, spark.read.parquet(f"{out}/bucket=0").collect()))
+
+    frame_cls = type(spark.range(1))
+    real_count = frame_cls.count
+    with monkeypatch.context() as m, pytest.raises(RuntimeError, match="row-count mismatch"):
+        m.setattr(frame_cls, "count", lambda self: real_count(self) + 1)
+        compact_buckets(spark, out, run_id="cp")
+    assert {f: os.path.getmtime(f) for f in glob.glob(f"{out}/bucket=0/*.parquet")} == files
+    assert sorted(map(tuple, spark.read.parquet(f"{out}/bucket=0").collect())) == rows
+    assert ManifestStore(tmp_path / "data" / "_manifest.jsonl").done_keys("cp") == set()
+
+
 def test_forget_bigint_id_layout(spark, tmp_path):
     """The deleter must hash ids in the layout's own id type: a bigint
     ``doc_id`` hashed as a string lands in other buckets."""

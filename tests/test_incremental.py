@@ -66,3 +66,38 @@ def test_incremental_only_computes_new_cutoffs(spark, tmp_path):
         .collect()
     )
     assert [r.asDict() for r in got] == [r.asDict() for r in expect]
+
+
+def test_backfill_commits_empty_buckets(spark, tmp_path):
+    """Two conversations over 8 buckets: the empty buckets still end
+    committed, readable and carrying the output schema, a rerun skips
+    all 8, and the read-back equals the one-shot frame."""
+    import json
+
+    from kkbox_churn_prediction_spark.plans.backfill import backfill_features
+    from kkbox_churn_prediction_spark.plans.manifest import (
+        read_backfill_output,
+        resumable_backfill,
+    )
+
+    turns, cutoffs = _turns(spark, [1, 2, 3]), _cutoffs(spark, [2, 3])
+    oneshot = backfill_features(turns, cutoffs)
+    out = f"{tmp_path}/ckpt"
+
+    def run():
+        return resumable_backfill(
+            spark, lambda s: backfill_features(turns, cutoffs), out, run_id="e", n_buckets=8
+        )
+
+    assert run() == {"buckets_run": 8, "buckets_skipped": 0, "rows": 4}
+    commits = [json.loads(x) for x in open(f"{out}/_manifest.jsonl")][1:]
+    assert sorted(int(c["partition_key"]) for c in commits) == list(range(8))
+    assert sum(c["row_count"] == 0 for c in commits) >= 6
+    names_types = [(f.name, f.dataType) for f in oneshot.schema]
+    for b in range(8):
+        part = spark.read.parquet(f"{out}/bucket={b}")
+        assert [(f.name, f.dataType) for f in part.schema] == names_types
+    assert run() == {"buckets_run": 0, "buckets_skipped": 8, "rows": 0}
+    back = read_backfill_output(spark, out)
+    assert [(f.name, f.dataType) for f in back.schema] == names_types
+    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, oneshot.collect()))

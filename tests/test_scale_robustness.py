@@ -116,6 +116,66 @@ def test_resumable_backfill_kill_restart(spark, turns, tmp_path, monkeypatch):
     assert st2["buckets_run"] == 0 and st2["buckets_skipped"] == 4
 
 
+def test_kill_between_staging_and_publish_reruns_clean(spark, turns, tmp_path, monkeypatch):
+    """Every pending bucket is staged by one write before any bucket
+    is published; a kill at that boundary leaves nothing live or
+    committed, and the rerun converges to the one-shot output with no
+    ``_staging/`` left behind."""
+    from kkbox_churn_prediction_spark.plans import manifest as mf
+    from kkbox_churn_prediction_spark.plans.backfill import backfill_features
+
+    cutoffs = spark.createDataFrame([(datetime(2024, 1, 10),)], "cutoff_ts timestamp")
+
+    def build(s):
+        return backfill_features(turns, cutoffs)
+
+    def killed(*args, **kwargs):
+        raise RuntimeError("killed before publish")
+
+    out = tmp_path / "ckpt"
+    with monkeypatch.context() as m, pytest.raises(RuntimeError, match="killed before publish"):
+        m.setattr(mf, "publish", killed)
+        resumable_backfill(spark, build, str(out), run_id="k", n_buckets=4)
+    staged = sorted(p.name for p in (out / "_staging").iterdir() if p.is_dir())
+    assert staged == [f"bucket={b}" for b in range(4)]
+    assert not list(out.glob("bucket=*"))
+    assert mf.ManifestStore(out / "_manifest.jsonl").done_keys("k") == set()
+
+    st = resumable_backfill(spark, build, str(out), run_id="k", n_buckets=4)
+    assert st["buckets_run"] == 4 and st["buckets_skipped"] == 0
+    assert not (out / "_staging").exists()
+    got = read_backfill_output(spark, str(out))
+    want = build(spark)
+    assert sorted(map(tuple, got.select(*want.columns).collect())) == sorted(
+        map(tuple, want.collect())
+    )
+
+
+def test_backfill_jobs_do_not_grow_with_buckets(spark, tmp_path):
+    """One staging write serves every pending bucket and publish reads
+    nothing back, so 8 non-empty buckets cost no more Spark jobs than
+    2."""
+    import json
+
+    sc = spark.sparkContext
+    df = spark.range(64).select(
+        F.concat(F.lit("c"), F.col("id")).alias("conv_id"), (F.col("id") * 3).alias("x")
+    )
+
+    def jobs(n_buckets):
+        out, group = tmp_path / f"b{n_buckets}", f"backfill-{n_buckets}-buckets"
+        sc.setJobGroup(group, group)
+        try:
+            resumable_backfill(spark, lambda s: df, str(out), run_id="j", n_buckets=n_buckets)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        lines = [json.loads(x) for x in (out / "_manifest.jsonl").read_text().splitlines()]
+        assert all(r["row_count"] > 0 for r in lines if r.get("kind") != "run")
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs(8) <= jobs(2)
+
+
 def test_resume_refuses_changed_input_fingerprint(spark, turns, tmp_path, monkeypatch):
     """VERDICT #7: a resume against CHANGED input must not mix old
     done-buckets with new-input buckets — it refuses outright."""
