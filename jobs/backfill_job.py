@@ -43,7 +43,11 @@ def main(argv: list[str] | None = None) -> None:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    from kkbox_churn_prediction_spark.operators.asof import asof_join_broadcast_cutoffs
+    from kkbox_churn_prediction_spark.operators.asof import (
+        asof_join_broadcast_cutoffs,
+        collect_literal,
+        literal_relation,
+    )
     from kkbox_churn_prediction_spark.operators.leakage import assert_no_leakage
     from kkbox_churn_prediction_spark.plans.backfill import backfill_features
     from kkbox_churn_prediction_spark.plans.manifest import (
@@ -58,17 +62,17 @@ def main(argv: list[str] | None = None) -> None:
     turns = spark.read.parquet(args.input).withColumn(
         "ts", F.col("ts").cast("timestamp")
     )
+    # the cutoff list is collected once, as a literal: a lazy frame would
+    # be rebuilt from a fact scan by the staging write and again by the gate
     if args.cutoffs:
         vals = [(c.strip(),) for c in args.cutoffs.split(",")]
-        cutoffs = spark.createDataFrame(vals, "cutoff_str string").select(
-            F.col("cutoff_str").cast("timestamp").alias("cutoff_ts")
+        cutoffs = collect_literal(
+            literal_relation(spark, vals, "cutoff_str string").select(
+                F.col("cutoff_str").cast("timestamp").alias("cutoff_ts")
+            )
         )
     else:
-        # collected once: as a lazy frame the cutoff list would be rebuilt
-        # from a fact scan by the staging write and again by the gate
-        cutoffs = spark.createDataFrame(
-            weekly_cutoffs(turns).collect(), "cutoff_ts timestamp"
-        )
+        cutoffs = collect_literal(weekly_cutoffs(turns))
 
     stats = resumable_backfill(
         spark,

@@ -45,6 +45,7 @@ def main(argv: list[str] | None = None) -> dict:
     )
     from kkbox_churn_prediction_spark.plans.manifest import (
         fingerprint_parquet_dir,
+        read_backfill_output,
         resumable_backfill,
     )
 
@@ -63,7 +64,7 @@ def main(argv: list[str] | None = None) -> dict:
         params={"keep_lang": args.keep_lang, "min_quality": args.min_quality},
         bucket_col="doc_id",
     )
-    report = curation_report(spark.read.parquet(f"{args.output}/bucket=*")).collect()
+    report = curation_report(read_backfill_output(spark, args.output)).collect()
     print(f"curation complete: {stats}")
     for r in sorted(report, key=lambda r: r["verdict"]):
         print(f"  {r['verdict']}: {r['n_docs']} docs, {r['total_tokens']} tokens")

@@ -763,16 +763,18 @@ def ipw_ate(
             }
         )
 
-    if profile.limit(1).count() == 0:
-        # EMPTY panel: no propensity profile exists — mirror the
-        # oracle's one degenerate row (NULL counts/fit, 0.0 means
-        # from its guarded ratios; r5 empty-sweep)
-        return units.sparkSession.createDataFrame(
-            [(None, None, None, None, 0.0, 0.0, 0.0, 0.0)],
-            "n_treat bigint, n_ctrl bigint, a double, b double, "
-            "mu_treat double, mu_ctrl double, ate_ipw double, "
-            "ate_naive double",
-        )
+    # EMPTY panel: no propensity profile exists — mirror the oracle's
+    # one degenerate row (NULL counts/fit, 0.0 means from its guarded
+    # ratios; r5 empty-sweep), appended from a global count of the
+    # profile with no eager action
+    empty = profile.agg(F.count(F.lit(1)).alias("_n")).where(F.col("_n") == 0)
+    degenerate = empty.select(
+        F.lit(None).cast("bigint").alias("n_treat"),
+        F.lit(None).cast("bigint").alias("n_ctrl"),
+        F.lit(None).cast("double").alias("a"),
+        F.lit(None).cast("double").alias("b"),
+        *[F.lit(0.0).alias(c) for c in ("mu_treat", "mu_ctrl", "ate_ipw", "ate_naive")],
+    )
     fitted = profile.groupBy("_g").applyInPandas(_fit, schema=schema)
     return fitted.select(
         "n_treat",
@@ -783,7 +785,7 @@ def ipw_ate(
         F.round("mu_ctrl", 6).alias("mu_ctrl"),
         F.round("ate_ipw", 6).alias("ate_ipw"),
         F.round("ate_naive", 6).alias("ate_naive"),
-    )
+    ).unionByName(degenerate)
 
 
 def normal_p_two_sided(z: Column) -> Column:

@@ -29,14 +29,27 @@ Physical strategy at 100 TB:
   ts)`` (see ``plans.backfill``) so repeated operators reuse the
   layout. AQE skew-join splits mega-conversation partitions.
 
+The cutoff list is collected ONCE, at the edge of a plan (the job,
+``plans.folds.backtest``, ``plans.incremental``, the gate source
+``sources.events.cutoffs_from_events``), and every broadcast is built
+from it by :func:`collect_literal` / :func:`literal_relation`: a
+deduplicated, sorted literal that Catalyst plans as a
+``LocalTableScan``. A cutoff frame left lazy over the fact table is
+re-scanned at every use, and one built by ``createDataFrame(list)``
+is a Python-RDD scan (``Scan ExistingRDD``) that Python workers
+unpickle whenever a plan reads it.
+
 The whole as-of family shares :func:`cutoff_grid` (the entity×cutoff
 grid) and :func:`nearest_turn` (the nearest-turn pick).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import LongType, StructField, StructType, TimestampType
 
 
 def leak_guard(
@@ -115,6 +128,63 @@ def cutoff_grid(turns: DataFrame, cutoffs: DataFrame) -> DataFrame:
     join broadcasts it; the grid keeps the entity side's partitioning.
     """
     return turns.select("conv_id").distinct().crossJoin(F.broadcast(cutoffs))
+
+
+def _local_relation(spark: SparkSession, rows, schema: StructType) -> DataFrame:
+    """``rows`` — timestamps as unix micros — deduplicated and sorted
+    on the driver, as a LocalRelation with exactly ``schema``. Arrow
+    carries the micros as int64 and ``timestamp_micros`` restores
+    them, so the build is exact and independent of the driver's and
+    the session's time zones; Catalyst folds the projection into the
+    literal."""
+    ts = {f.name for f in schema if isinstance(f.dataType, TimestampType)}
+    build = StructType(
+        [StructField(f.name, LongType(), f.nullable) if f.name in ts else f for f in schema]
+    )
+    rows = sorted(set(map(tuple, rows)), key=lambda r: [(v is None, v) for v in r])
+    table = pa.Table.from_pylist(
+        [dict(zip(build.names, r)) for r in rows], schema=to_arrow_schema(build)
+    )
+    return spark.createDataFrame(table, build).select(
+        *[
+            F.timestamp_micros(f.name).alias(f.name, metadata=f.metadata)
+            if f.name in ts
+            else F.col(f.name)
+            for f in schema
+        ]
+    )
+
+
+def literal_relation(
+    spark: SparkSession, rows: list, schema: StructType | str
+) -> DataFrame:
+    """Python ``rows`` (tuples, as ``createDataFrame`` takes them;
+    naive datetimes are local time, as there) as a deduplicated,
+    sorted literal relation with exactly ``schema`` — a
+    ``LocalTableScan`` in every plan that reads it, not a Python-RDD
+    scan."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    to_us = TimestampType().toInternal
+    ts = [isinstance(f.dataType, TimestampType) for f in schema]
+    return _local_relation(
+        spark, [[to_us(v) if t else v for v, t in zip(r, ts)] for r in rows], schema
+    )
+
+
+def collect_literal(df: DataFrame) -> DataFrame:
+    """Collect a cutoff (or fold) frame ONCE and return it as a
+    deduplicated, sorted literal relation with ``df``'s exact schema,
+    nullability included (see :func:`literal_relation`). Timestamps
+    cross the driver as unix micros, so the round trip is exact to
+    the microsecond in any time zone. Collecting a frame that is
+    already literal runs no Spark job, so plans can re-derive lists
+    from it freely."""
+    ts = [isinstance(f.dataType, TimestampType) for f in df.schema]
+    micros = df.select(
+        *[F.unix_micros(c).alias(c) if t else F.col(c) for c, t in zip(df.columns, ts)]
+    )
+    return _local_relation(df.sparkSession, micros.collect(), df.schema)
 
 
 def nearest_turn(

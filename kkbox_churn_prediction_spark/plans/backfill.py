@@ -5,13 +5,17 @@ Equivalent of the reference's ``make backtest`` lifecycle
 as-of join → windowed aggregates → wide feature matrix with COALESCE
 defaults. The reference templates SQL text per fold and materializes
 a pandas frame per fold; here the cutoff grid is DATA (a broadcast
-DataFrame), all folds compute in ONE plan, and nothing crosses the
-driver boundary.
+DataFrame), all folds compute in ONE plan, and only the cutoff list
+crosses the driver boundary: callers collect it once, at the plan's
+edge, into a literal relation (``operators.asof.collect_literal``),
+so every cutoff broadcast below is a ``LocalTableScan`` — no fact
+scan rebuilds the list and no Python-RDD scan feeds it.
 
 Plan shape (``.explain("formatted")``-verified):
 
   parquet scan (pruned: event cols only, null filters pushed)
-    → broadcast nested-loop join on range predicate (no fact shuffle)
+    → broadcast nested-loop join on range predicate against the
+      literal cutoff list (no fact shuffle)
     → ONE two-level hash aggregate: partials per (conv_id, cutoff_ts,
       distinct value), the one big shuffle; merged per (conv_id,
       cutoff_ts) over the collapsed rows

@@ -34,6 +34,7 @@ from datetime import datetime, timedelta
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kkbox_churn_prediction_spark.operators.asof import collect_literal, literal_relation
 from kkbox_churn_prediction_spark.operators.horizons import DEFAULT_SPECS
 from kkbox_churn_prediction_spark.operators.labels import attach_labels
 from kkbox_churn_prediction_spark.plans.backfill import backfill_features
@@ -63,8 +64,8 @@ def make_folds(
         )
         for i in range(n_folds)
     ]
-    return spark.createDataFrame(
-        rows, "fold string, cutoff_ts timestamp, lookback_days int"
+    return literal_relation(
+        spark, rows, "fold string, cutoff_ts timestamp, lookback_days int"
     )
 
 
@@ -74,16 +75,21 @@ def expanding_cutoffs(cutoffs: DataFrame, base_lookback_days: int = 7) -> DataFr
     base_lookback), so fold i's window covers all history the first
     fold could see — "train on all prior" (``temporal_cv.py:139``).
 
-    The min-over-all window runs on the CUTOFF LIST (a handful of fold
-    boundaries, broadcast everywhere downstream), not on data — the
-    single-partition window here is a few rows by construction."""
-    w = Window.partitionBy(F.lit(1))
+    The earliest cutoff is read on the driver from the cutoff list (a
+    handful of fold boundaries; no Spark job when ``cutoffs`` is a
+    :func:`~..operators.asof.collect_literal` relation) and enters the
+    plan as a literal, so the lookback is a projection of the list —
+    no single-partition window."""
+    first_us = min(
+        (us for (us,) in cutoffs.select(F.unix_micros("cutoff_ts")).collect() if us is not None),
+        default=None,
+    )
+    first = F.timestamp_micros(F.lit(first_us).cast("long"))
     return cutoffs.select(
         "cutoff_ts",
-        (
-            F.datediff(F.col("cutoff_ts"), F.min("cutoff_ts").over(w))
-            + F.lit(int(base_lookback_days))
-        ).cast("int").alias("lookback_days"),
+        (F.datediff(F.col("cutoff_ts"), first) + F.lit(int(base_lookback_days)))
+        .cast("int")
+        .alias("lookback_days"),
     )
 
 
@@ -105,7 +111,10 @@ def backtest(
     ``lookback_days`` column in the join bound) and emits the
     ``*_full`` whole-window aggregates alongside the fixed horizons.
     """
-    cutoffs = folds.select("cutoff_ts").distinct()
+    # the fold list is collected once; the fold and cutoff broadcasts
+    # are literals built from it (the second collect runs no job)
+    folds = collect_literal(folds.select("fold", "cutoff_ts"))
+    cutoffs = collect_literal(folds.select("cutoff_ts"))
     if lookback_policy == "expanding":
         cuts = expanding_cutoffs(cutoffs, base_lookback_days=max(horizons_days))
         feats = backfill_features(
@@ -121,9 +130,7 @@ def backtest(
     else:
         raise ValueError(f"unknown lookback_policy {lookback_policy!r}")
     out = attach_labels(feats, turns, cutoffs, label_horizon_days)
-    return out.join(
-        F.broadcast(folds.select("fold", "cutoff_ts")), ["cutoff_ts"], "inner"
-    )
+    return out.join(F.broadcast(folds), ["cutoff_ts"], "inner")
 
 
 def assign_cv_folds(

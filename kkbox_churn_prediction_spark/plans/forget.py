@@ -30,16 +30,18 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kkbox_churn_prediction_spark.operators.asof import literal_relation
 from kkbox_churn_prediction_spark.plans.manifest import (
     bucket_of,
     observe_rows,
     open_run,
+    read_backfill_output,
     write_partitions,
 )
 
 
 def _ids_frame(spark: SparkSession, ids: list, col: str, id_type: str) -> DataFrame:
-    return spark.createDataFrame([(str(i),) for i in ids], f"{col} string").select(
+    return literal_relation(spark, [(str(i),) for i in ids], f"{col} string").select(
         F.col(col).cast(id_type).alias(col)
     )
 
@@ -77,9 +79,7 @@ def forget_entities(
     manifest, _ = open_run(out, run_id, params={"op": "forget", "n_ids": len(ids)})
     if not any(out.glob("bucket=*")):
         return {"buckets_rewritten": 0, "rows_deleted": 0}
-    id_type = (
-        spark.read.parquet(str(out / "bucket=*")).schema[id_col].dataType.simpleString()
-    )
+    id_type = read_backfill_output(spark, str(out)).schema[id_col].dataType.simpleString()
     affected = [
         b
         for b in sorted(buckets_for_ids(spark, ids, n_buckets, id_type))

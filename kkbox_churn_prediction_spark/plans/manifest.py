@@ -284,4 +284,8 @@ def resumable_backfill(
 
 
 def read_backfill_output(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{out_dir}/bucket=*")
+    """The live ``bucket=K`` partitions of ``out_dir``, without a
+    ``bucket`` column. The directories are listed and read by name: a
+    ``bucket=*`` glob read makes Spark probe the literal glob path for
+    a streaming-sink log and log its ``FileNotFoundException``."""
+    return spark.read.parquet(*sorted(str(p) for p in Path(out_dir).glob("bucket=*")))

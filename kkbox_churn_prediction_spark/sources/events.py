@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kkbox_churn_prediction_spark.operators.asof import collect_literal
+
 # event_type → role mapping (deterministic categorical recode, like the
 # reference's inline gender CASE encode at
 # features/features_comprehensive.sql:317-321).
@@ -95,17 +97,20 @@ def cutoffs_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     turns. Analog of the reference's per-fold cutoff dates
     (``src/backtest.py:309-313``), but derived from data so the same
     query runs at any scale factor without hard-coded literals.
+
+    The list is collected here, once (``operators.asof.collect_literal``):
+    every plan that broadcasts it reads a literal instead of
+    re-scanning ``events`` for it.
     """
     ev = (
         read_table(spark, sf_dir, "events")
         .withColumn("ts", F.col("ts").cast("timestamp"))
         .where(F.col("ts").isNotNull())
     )
-    return (
+    return collect_literal(
         ev.select(
             (F.date_trunc("week", F.col("ts")) + F.expr("INTERVAL 7 DAYS")).alias("cutoff_ts")
-        )
-        .distinct()
+        ).distinct()
     )
 
 

@@ -57,7 +57,7 @@ def test_flagship_has_no_expand_and_no_global_sort(spark):
     assert "Exchange SinglePartition" not in plan
     assert _n_joins(plan) <= 3
     plan = _plan(spark, "backtest_folds")
-    assert plan.count("Scan parquet") <= 7
+    assert plan.count("Scan parquet") <= 3
     assert _n_joins(plan) <= 6
     assert plan.count("SortMergeJoin") <= 2
 
