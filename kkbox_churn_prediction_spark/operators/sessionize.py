@@ -167,18 +167,26 @@ def sessionize_auto(
 def session_aggregates(turns: DataFrame, gap_seconds: int = DEFAULT_GAP_SECONDS) -> DataFrame:
     """One row per (conv_id, session_id): bounds, turn count, text
     stats, duration. Per-entity multi-stat hash agg (A1) at session
-    grain."""
-    s = sessionize(turns, gap_seconds)
+    grain.
+
+    The per-turn inputs of the aggregate are projected before the
+    window: Catalyst does not push ``length(text)`` below a ``Window``,
+    so otherwise the window's exchange and sort carry ``text`` and
+    ``role``."""
+    narrow = turns.select(
+        "conv_id",
+        "turn_idx",
+        "ts",
+        F.when(F.col("role") == "user", 1).otherwise(0).alias("is_user"),
+        F.expr("CAST(length(text) AS BIGINT)").alias("text_len"),
+    )
+    s = sessionize(narrow, gap_seconds)
     return s.groupBy("conv_id", "session_id").agg(
         F.min("ts").alias("session_start"),
         F.max("ts").alias("session_end"),
         F.count(F.lit(1)).alias("n_turns"),
-        F.coalesce(
-            F.sum(F.expr("CASE WHEN role = 'user' THEN 1 ELSE 0 END")), F.lit(0)
-        ).cast("bigint").alias("n_user_turns"),
-        F.coalesce(F.sum(F.expr("CAST(length(text) AS BIGINT)")), F.lit(0)).alias(
-            "text_len_sum"
-        ),
+        F.coalesce(F.sum("is_user"), F.lit(0)).cast("bigint").alias("n_user_turns"),
+        F.coalesce(F.sum("text_len"), F.lit(0)).alias("text_len_sum"),
         (F.max(F.unix_micros(F.col("ts"))) - F.min(F.unix_micros(F.col("ts")))).alias(
             "duration_micros"
         ),

@@ -5,6 +5,23 @@ memory_limit='8GB'; preserve_insertion_order=false`` at
 ``src/backtest.py:301-303``). Here the equivalent knobs are AQE,
 shuffle-partition sizing, and Arrow; determinism is recovered in
 tests by explicit sorts (cf. ``preserve_insertion_order=false``).
+
+Generated code is compiled once per session. Whole-stage codegen keeps
+its compiled classes in one JVM-wide LRU cache of 100 entries
+(``spark.sql.codegen.cache.maxEntries``). One ``turn_features`` pass
+(sessionize, lag/lead, next-event labels, weekly history and PSI, each
+consumed once) compiles 105-119 distinct classes, in the same order each
+pass, so at 100 every later pass missed the cache and compiled 96-108
+classes again (seed-1 and seed-2 benchmark inputs, ``local[4]``). A
+``checkpointed_backtest`` pass compiles 57-70, and the two families run
+in turn in one session about 165. The cache is therefore sized at 1000:
+several times the largest measured working set, with room for a
+long-lived session that runs more plans. The class name also embeds the
+stage id that AQE assigns, which can differ between runs of the same
+plan, so the same code gets a new cache key (21 of a backtest pass's
+classes compiled again on its second pass for that reason alone);
+``spark.sql.codegen.useIdInClassName=false`` drops the id from the key.
+With both, a second pass of the same plans compiles nothing.
 """
 
 from __future__ import annotations
@@ -46,6 +63,12 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # measured working sets: 105-119 generated classes per
+        # turn_features pass, 57-70 per checkpointed_backtest pass, about
+        # 165 for both in one session; the default 100 made every
+        # turn_features pass recompile (see module docstring)
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     if extra_conf:
         for k, v in extra_conf.items():

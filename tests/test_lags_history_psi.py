@@ -477,3 +477,40 @@ def test_transition_backtest_drops_straddling_pairs(spark):
     r = out[("eval", "c")]
     # train saw ONLY a->b, so from 'c' the model predicts NULL
     assert r["predicted"] is None and r["n_eval"] == 1 and r["n_correct"] == 0
+
+
+def test_second_turn_features_pass_compiles_nothing(spark):
+    """The five ``turn_features`` outputs, each consumed by its
+    checksum, use more generated classes than Spark's default codegen
+    cache holds (100), and AQE's stage ids change the class names
+    between runs of one plan. ``get_spark`` sizes the cache and drops
+    the ids from the key, so a second pass over the same plans must
+    find every class in the cache."""
+    from kkbox_churn_prediction_spark.operators.labels import time_to_next_qualifying_turn
+    from kkbox_churn_prediction_spark.operators.profile import table_checksum
+    from kkbox_churn_prediction_spark.operators.sessionize import session_aggregates
+    from kkbox_churn_prediction_spark.sources.synth import clean_turns
+
+    turns = clean_turns(
+        to_spark(spark, generate_transcripts(n_convs=8, mean_turns=20, mega_conv=False))
+    )
+    binned = turns.select(
+        F.when(F.dayofmonth("ts") % 2 == 0, F.lit("even")).otherwise(F.lit("odd")).alias("fold"),
+        fixed_width_bins(F.expr("CAST(length(text) AS BIGINT)"), 5.0, 10).alias("bin"),
+    )
+    outputs = [
+        session_aggregates(turns),
+        lag_lead_features(turns),
+        time_to_next_qualifying_turn(turns),
+        history_lag_features(turns, n_lags=2),
+        psi_from_bins(binned, "fold", "bin", ref_fold="even"),
+    ]
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def run_pass():
+        return [table_checksum(df, sorted(df.columns)).first() for df in outputs]
+
+    first = run_pass()
+    before = compiles.getCount()
+    assert run_pass() == first
+    assert compiles.getCount() - before == 0
