@@ -960,7 +960,7 @@ def _q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         # direction) -> no candidates, not a NULL-rel greedy loop
         # (r5 fuzz: float(None) crash); oracle mirrors the filter
         .where(F.col("rel").isNotNull())
-        .persist()
+        .persist()  # kept: the candidate collect and the similarity join read it
     )
     cv = embs.join(
         cands.select(F.col("cand_id").alias("vec_id")), "vec_id"
@@ -4779,6 +4779,7 @@ def _q_lsh_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_lsh_candidates,
     )
 
+    # kept: the component loop and the returned modularity plan read it
     pairs = minhash_lsh_candidates(
         _docs(spark, sf_dir), n=3, bands=4, rows_per_band=2
     ).persist()

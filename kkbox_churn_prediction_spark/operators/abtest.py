@@ -1020,7 +1020,6 @@ def permutation_test(
             - s0.cast("double") / n0.cast("double"),
         ).otherwise(F.lit(0.0))
 
-    units = units.persist()
     obs_arm = arm(F.concat(F.lit(salt + "obs"), F.col("u")))
     s1, s0, n1, n0 = diff(obs_arm)
     obs = units.agg(
@@ -1231,21 +1230,19 @@ def kruskal_wallis(
         .where(F.col("v").isNotNull() & F.col("grp").isNotNull())
         .groupBy("v", "grp")
         .agg(F.count(F.lit(1)).cast("long").alias("t_gv"))
-        .persist()
+        .persist()  # kept: the per-group join and the rank histogram both read it
     )
     hist = gv.groupBy("v").agg(F.sum("t_gv").cast("long").alias("t"))
     w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
     # bounded-table global window (distinct metric values), per the
-    # engine's global-window discipline — never over raw rows; the
-    # ranked histogram feeds two consumers (per-group join + totals),
-    # so pin it like gv
+    # engine's global-window discipline — never over raw rows
     ranked = hist.select(
         "v",
         "t",
         F.coalesce(F.sum("t").over(w), F.lit(0))
         .cast("long")
         .alias("cum_before"),
-    ).persist()
+    )
     two_mid = (
         F.lit(2) * F.col("cum_before") + F.col("t") + F.lit(1)
     ).cast(dec)
@@ -1258,7 +1255,6 @@ def kruskal_wallis(
                 "two_r"
             ),
         )
-        .persist()  # k rows; read by k-count, H-sum, and the output
     )
     totals = ranked.agg(
         F.sum("t").cast("long").alias("n_total"),

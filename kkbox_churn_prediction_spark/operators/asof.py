@@ -173,7 +173,8 @@ def literal_relation(
 
 
 def collect_literal(df: DataFrame) -> DataFrame:
-    """Collect a cutoff (or fold) frame ONCE and return it as a
+    """Collect a small frame (a cutoff or fold list, or a count table
+    keyed by its grouping columns) ONCE and return it as a
     deduplicated, sorted literal relation with ``df``'s exact schema,
     nullability included (see :func:`literal_relation`). Timestamps
     cross the driver as unix micros, so the round trip is exact to

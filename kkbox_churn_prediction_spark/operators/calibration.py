@@ -42,6 +42,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from kkbox_churn_prediction_spark.operators.asof import collect_literal
+
 # sklearn's log_loss eps clip (reference uses sklearn defaults,
 # src/models.py metrics)
 LOGLOSS_EPS = 1e-15
@@ -1070,8 +1072,8 @@ def conformal_interval(
     scored = df.join(F.broadcast(means), group_col).select(
         F.abs(y - F.col("_yhat")).alias("s"), F.col(split_col).alias("_sp")
     )
-    # the bounded score histogram feeds the quantile, the totals, and
-    # the coverage branches — persist it so the corpus scores ONCE
+    # kept: the quantile, totals and coverage branches of the returned
+    # plan read the score histogram (one row per distinct score)
     hist = scored.groupBy("s").agg(
         F.sum(F.when(F.col("_sp") == cal_value, 1).otherwise(0))
         .cast("long")
@@ -1191,8 +1193,8 @@ def pinball_loss(
             F.max(q).alias(f"_q{i}"),  # constant per group post-join
         ]
     # the group-sized sufficient-statistic table feeds one branch per
-    # tau — persist it so the test split aggregates ONCE
-    per = test.groupBy(group_col).agg(*aggs).persist()
+    # tau — a literal, so the test split aggregates ONCE
+    per = collect_literal(test.groupBy(group_col).agg(*aggs))
     rows = []
     for i, t in enumerate(ts):
         q = F.col(f"_q{i}")

@@ -366,7 +366,8 @@ def pagerank(
     ≥ 1), so Σ rank = 1 holds each round.
 
     Iteration discipline (same as ``connected_components``): the edge
-    and degree tables persist — every round joins them, and without
+    and degree tables are cached while the rounds run (released on
+    return) — every round joins them, and without
     the pin each round re-derives them from the source scan (measured
     44 scans / 72 exchanges at iters=3 on the shipped gate) — and
     each round's ranks are ``localCheckpoint``ed so the plan is one
@@ -416,28 +417,32 @@ def pagerank(
         )
     e = e.distinct().persist()
     deg = e.groupBy("_s").agg(F.count(F.lit(1)).alias("_deg")).persist()
-    n_total = deg.agg(F.count(F.lit(1)).alias("_n"))
-    ranks = deg.select("_s").crossJoin(F.broadcast(n_total)).select(
-        F.col("_s").alias("node"), (F.lit(1.0) / F.col("_n")).alias("rank")
-    )
-    d = float(damping)
-    for _ in range(int(iters)):
-        outflow = ranks.join(
-            deg.select(F.col("_s").alias("node"), "_deg"), "node"
-        ).select(
-            F.col("node").alias("_s"),
-            (F.col("rank") / F.col("_deg")).alias("_share"),
+    try:
+        n_total = deg.agg(F.count(F.lit(1)).alias("_n"))
+        ranks = deg.select("_s").crossJoin(F.broadcast(n_total)).select(
+            F.col("_s").alias("node"), (F.lit(1.0) / F.col("_n")).alias("rank")
         )
-        inflow = (
-            e.join(outflow, "_s")
-            .groupBy("_d")
-            .agg(F.sum("_share").alias("_in"))
-        )
-        ranks = inflow.crossJoin(F.broadcast(n_total)).select(
-            F.col("_d").alias("node"),
-            ((1.0 - d) / F.col("_n") + d * F.col("_in")).alias("rank"),
-        ).localCheckpoint(eager=True)
-    return ranks
+        d = float(damping)
+        for _ in range(int(iters)):
+            outflow = ranks.join(
+                deg.select(F.col("_s").alias("node"), "_deg"), "node"
+            ).select(
+                F.col("node").alias("_s"),
+                (F.col("rank") / F.col("_deg")).alias("_share"),
+            )
+            inflow = (
+                e.join(outflow, "_s")
+                .groupBy("_d")
+                .agg(F.sum("_share").alias("_in"))
+            )
+            ranks = inflow.crossJoin(F.broadcast(n_total)).select(
+                F.col("_d").alias("node"),
+                ((1.0 - d) / F.col("_n") + d * F.col("_in")).alias("rank"),
+            ).localCheckpoint(eager=True)
+        return ranks
+    finally:
+        e.unpersist()
+        deg.unpersist()
 
 
 def _pagerank_driver(
@@ -810,6 +815,8 @@ def lsh_dbscan(
         embedding_cosine_pairs,
     )
 
+    # pairs and core are cached while the component loop and the
+    # eagerly checkpointed output read them
     pairs = (
         embedding_cosine_pairs(emb, vec_col, threshold, id_col, bucket_bits)
         .select("doc_a", "doc_b")
@@ -824,59 +831,63 @@ def lsh_dbscan(
         .select(F.col("u").alias("node"))
         .persist()
     )
-    core_edges = (
-        pairs.join(core.select(F.col("node").alias("doc_a")), "doc_a")
-        .join(core.select(F.col("node").alias("doc_b")), "doc_b")
-        .select("doc_a", "doc_b")
-    )
-    comp = connected_components(core_edges, max_iter=max_iter).select(
-        "node", "component"
-    )
-    core_comp = core.join(comp, "node", "left").select(
-        "node", F.coalesce("component", F.col("node")).alias("component")
-    )
-    border = (
-        sym.join(
-            core_comp.select(
-                F.col("node").alias("v"), F.col("component").alias("_c")
-            ),
-            "v",
+    try:
+        core_edges = (
+            pairs.join(core.select(F.col("node").alias("doc_a")), "doc_a")
+            .join(core.select(F.col("node").alias("doc_b")), "doc_b")
+            .select("doc_a", "doc_b")
         )
-        .join(core.select(F.col("node").alias("u")), "u", "left_anti")
-        .groupBy("u")
-        .agg(F.min("_c").alias("component"))
-        .select(F.col("u").alias("node"), "component")
-    )
-    base = emb.select(F.col(id_col).alias("node"))
-    lab = (
-        base.join(
-            core_comp.select("node", F.col("component").alias("_cc")), "node", "left"
+        comp = connected_components(core_edges, max_iter=max_iter).select(
+            "node", "component"
         )
-        .join(border.select("node", F.col("component").alias("_cb")), "node", "left")
-        .join(deg.select(F.col("u").alias("node"), "n_nb"), "node", "left")
-        .select(
-            F.col("node").alias(id_col),
-            F.coalesce(F.col("_cc"), F.col("_cb"), F.lit(-1))
-            .cast("long")
-            .alias("cluster"),
-            F.when(F.col("_cc").isNotNull(), 1).otherwise(0).cast("int").alias(
-                "is_core"
-            ),
-            F.coalesce("n_nb", F.lit(0)).cast("long").alias("n_neighbors"),
+        core_comp = core.join(comp, "node", "left").select(
+            "node", F.coalesce("component", F.col("node")).alias("component")
         )
-    )
-    sizes = (
-        lab.where(F.col("cluster") != -1)
-        .groupBy("cluster")
-        .agg(F.count(F.lit(1)).cast("long").alias("cluster_size"))
-    )
-    return lab.join(sizes, "cluster", "left").select(
-        id_col,
-        "cluster",
-        "is_core",
-        "n_neighbors",
-        F.coalesce("cluster_size", F.lit(0)).cast("long").alias("cluster_size"),
-    )
+        border = (
+            sym.join(
+                core_comp.select(
+                    F.col("node").alias("v"), F.col("component").alias("_c")
+                ),
+                "v",
+            )
+            .join(core.select(F.col("node").alias("u")), "u", "left_anti")
+            .groupBy("u")
+            .agg(F.min("_c").alias("component"))
+            .select(F.col("u").alias("node"), "component")
+        )
+        base = emb.select(F.col(id_col).alias("node"))
+        lab = (
+            base.join(
+                core_comp.select("node", F.col("component").alias("_cc")), "node", "left"
+            )
+            .join(border.select("node", F.col("component").alias("_cb")), "node", "left")
+            .join(deg.select(F.col("u").alias("node"), "n_nb"), "node", "left")
+            .select(
+                F.col("node").alias(id_col),
+                F.coalesce(F.col("_cc"), F.col("_cb"), F.lit(-1))
+                .cast("long")
+                .alias("cluster"),
+                F.when(F.col("_cc").isNotNull(), 1).otherwise(0).cast("int").alias(
+                    "is_core"
+                ),
+                F.coalesce("n_nb", F.lit(0)).cast("long").alias("n_neighbors"),
+            )
+        )
+        sizes = (
+            lab.where(F.col("cluster") != -1)
+            .groupBy("cluster")
+            .agg(F.count(F.lit(1)).cast("long").alias("cluster_size"))
+        )
+        return lab.join(sizes, "cluster", "left").select(
+            id_col,
+            "cluster",
+            "is_core",
+            "n_neighbors",
+            F.coalesce("cluster_size", F.lit(0)).cast("long").alias("cluster_size"),
+        ).localCheckpoint(eager=True)
+    finally:
+        pairs.unpersist()
+        core.unpersist()
 
 
 def modularity(
@@ -1122,7 +1133,6 @@ def adamic_adar(
         F.col(src) != F.col(dst)
     )
     und = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
-    und = und.persist()
     deg = und.groupBy("a").agg(F.count(F.lit(1)).cast("long").alias("deg"))
     centers = deg.where((F.col("deg") >= 2) & (F.col("deg") <= max_degree)).select(
         F.col("a").alias("w"),
@@ -1155,6 +1165,4 @@ def adamic_adar(
             F.round(F.col("_s").cast("double") / 1.0e9, 6).alias("score"),
         )
     )
-    out = out.localCheckpoint(eager=True)
-    und.unpersist()
-    return out
+    return out.localCheckpoint(eager=True)

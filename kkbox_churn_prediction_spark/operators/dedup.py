@@ -530,18 +530,10 @@ def duplicate_spans(
         )
         .select(id_col, "n_tokens", "pos", stable_hash48(F.col("_gram")).alias("gh"))
     )
-    # the gram stream feeds BOTH the hot-gram aggregate and the join
-    # probe; without materialization each branch re-runs the corpus
-    # scan + normalize + split + md5 (the expensive part). persist —
-    # not localCheckpoint — keeps lineage, so a lost executor
-    # recomputes its blocks instead of failing the job; the cached
-    # form is the slim (id, n_tokens, pos, hash48) columns, shuffle-
-    # class I/O, spilling to disk when it outgrows memory. Lifecycle:
-    # cached blocks are EVICTABLE under the unified memory manager
-    # (execution demand reclaims them) and ContextCleaner unpersists
-    # when the caller releases the returned plan — long-lived
-    # sessions wanting deterministic release should unpersist via
-    # df.sparkSession.catalog.clearCache() or track the handle.
+    # kept: the hot-gram aggregate and the join probe of the returned
+    # plan both read the gram stream, which costs a corpus scan,
+    # normalize, split and hash per read. The entry stays registered
+    # until the caller unpersists it or clears the session's cache.
     from pyspark import StorageLevel
 
     grams = grams.persist(StorageLevel.MEMORY_AND_DISK)

@@ -227,7 +227,7 @@ def permutation_importance(
         F.pmod(stable_hash48(F.concat(F.lit("pib"), idc)), F.lit(int(n_buckets)))
         .alias("_bkt"),
         stable_hash48(F.concat(F.lit("pir"), idc)).alias("_hk"),
-    ).persist()
+    )
 
     def _score(cols: dict[str, Column]) -> Column:
         lin = F.lit(float(intercept))

@@ -39,13 +39,14 @@ def lag_lead_features(turns: DataFrame, ks: tuple[int, ...] = (1,)) -> DataFrame
         F.coalesce(
             F.unix_micros(F.col("ts")) - F.unix_micros(F.lag("ts", 1).over(w)), F.lit(-1)
         ),
-    ).withColumn(
+    ).withColumn("_prev", F.lag("role", 1).over(w))  # one lag(role) for both tests
+    prev = F.col("_prev")
+    return out.withColumn(
         "same_role_as_prev",
-        F.when(F.lag("role", 1).over(w).isNull(), F.lit(-1))
-        .when(F.lag("role", 1).over(w) == F.col("role"), F.lit(1))
+        F.when(prev.isNull(), F.lit(-1))
+        .when(prev == F.col("role"), F.lit(1))
         .otherwise(F.lit(0)),
-    )
-    return out
+    ).drop("_prev")
 
 
 def gap_percentiles_per_conv(
@@ -337,8 +338,8 @@ def transition_backtest(
         )
         .select("_fold", F.col("tool").alias("from_tool"), F.col("_next").alias("to_tool"))
     )
-    # train and eval branches both read the pair stream — persist the
-    # slim (fold, from, to) projection so the corpus window runs once
+    # kept: the train and eval branches of the returned plan both read
+    # the slim (fold, from, to) projection of the corpus window
     from pyspark import StorageLevel
 
     pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
@@ -493,7 +494,7 @@ def out_of_order_depth(
         F.expr(
             f"CAST(((arr - mn) * {int(n_buckets)}) DIV (mx - mn + 1) AS BIGINT)"
         ).alias("bkt"),
-    ).persist()  # feeds both the per-bucket maxima and the depth pass
+    ).persist()  # kept: the returned bucket maxima and depth pass both read it
     w_in = (
         Window.partitionBy("bkt")
         .orderBy("arr", "tb")
@@ -654,11 +655,8 @@ def tool_trigrams(turns: DataFrame, k: int = 20) -> DataFrame:
     """
     calls = turns.where(F.col("tool").isNotNull())
     w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
-    # BOTH leads ride ONE Window node; the slim (t1,t2,t3) projection
-    # feeds the trigram AND the order-1 bigram branches, so persist it
-    # (shared-intermediate discipline) — one corpus window pass total
-    from pyspark import StorageLevel
-
+    # BOTH leads ride ONE Window node; the trigram and the order-1
+    # bigram branches read the same window exchange (AQE reuses it)
     led = (
         calls.select(
             "conv_id",
@@ -669,7 +667,6 @@ def tool_trigrams(turns: DataFrame, k: int = 20) -> DataFrame:
             F.lead("tool", 2).over(w).alias("t3"),
         )
         .select("t1", "t2", "t3")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     tri = (
         led.where(F.col("t2").isNotNull() & F.col("t3").isNotNull())

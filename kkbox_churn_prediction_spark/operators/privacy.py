@@ -140,7 +140,7 @@ def t_closeness_audit(
     cell = (
         base.groupBy(*names, "_s")
         .agg(F.count(F.lit(1)).cast("long").alias("_c"))
-        .persist()
+        .persist()  # kept: the four rollups of the returned plan read it
     )
     glob = cell.groupBy("_s").agg(F.sum("_c").cast("long").alias("_g"))
     gtot = cell.agg(F.sum("_c").cast("long").alias("_gt"))
@@ -212,6 +212,8 @@ def deletion_cascade_audit(
     touches the same msno across every raw table
     (``src/labels.py``); erasure is the same key walk with deletes.
     """
+    # kept: each reached table is read by its count and by every child's
+    # key set in the returned plan
     affected: dict[str, DataFrame] = {
         root_table: tables[root_table]
         .join(

@@ -17,7 +17,8 @@ all column expressions, no UDF:
    edges (:func:`quantile_edges`, exact percentiles, matching
    ``np.quantile`` on the ref fold),
 2. :func:`_bin_counts` — ``groupBy(fold, bin).count()``, one shuffle
-   with map-side partials, persisted (folds × bins rows),
+   with map-side partials, collected into a literal (folds × bins
+   rows),
 3. a view over that table:
 
    - :func:`_freq_view` — zero-filled frequencies ``p`` (current
@@ -43,6 +44,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from kkbox_churn_prediction_spark.operators.asof import collect_literal
 
 CLIP = 1e-6  # src/psi.py:22-23 np.clip floor
 
@@ -106,10 +109,11 @@ def _bin_counts(binned: DataFrame, *keys: str) -> DataFrame:
     """The ``(*keys) → n`` count table every binned lens starts from:
     ONE groupBy with map-side partials over the stream. It is folds ×
     bins rows (tiny) but fans out into several branches (the fold
-    list, the bin set, the reference split) — persisted so the corpus
-    scan behind it runs once, not once per branch (4-6 scans measured
-    without)."""
-    return binned.groupBy(*keys).agg(F.count(F.lit(1)).alias("n")).persist()
+    list, the bin set, the reference split), so it is collected once
+    into a literal relation: the stream is read by one Spark job, not
+    once per branch (4 scans measured lazy), and no cache entry
+    outlives the call."""
+    return collect_literal(binned.groupBy(*keys).agg(F.count(F.lit(1)).alias("n")))
 
 
 def _observed_bins(

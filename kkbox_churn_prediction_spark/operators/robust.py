@@ -156,76 +156,79 @@ def huber_location(
                 int(n_iter),
             )
     hist = hist_plan.persist()
-    med = _weighted_median(hist).localCheckpoint()
-    # deviation histogram |v − med|: med is interpolated (may be .5);
-    # work on the 2x integer grid so the deviations stay exact
-    dev_hist = (
-        hist.crossJoin(F.broadcast(med))
-        .select(
-            F.abs(
-                F.col("v") * 2 - F.round(F.col("med") * 2).cast("long")
-            ).alias("v"),
-            F.col("c"),
-        )
-        .groupBy("v")
-        .agg(F.sum("c").alias("c"))
-    )
-    mad = _weighted_median(dev_hist).select(
-        (F.col("med") / 2).alias("mad")
-    )
-    # k on the 1e-9 grid so both engines carry the identical constant
-    mu = (
-        med.crossJoin(F.broadcast(mad))
-        .select(
-            F.round(F.col("med") * F.lit(float(_Q))).cast("long").alias("muq"),
-            F.round(F.col("mad") * F.lit(float(k_mult)) * F.lit(float(_Q)))
-            .cast("long")
-            .alias("kq"),
-            F.round(F.col("mad"), 6).alias("mad"),
-            F.round(F.col("med"), 6).alias("median"),
-        )
-        .localCheckpoint()
-    )
-    for _ in range(int(n_iter)):
-        joined = hist.crossJoin(F.broadcast(mu))
-        muf = F.col("muq").cast("double") / F.lit(float(_Q))
-        kf = F.col("kq").cast("double") / F.lit(float(_Q))
-        r = F.abs(F.col("v").cast("double") - muf)
-        w = F.when(r <= kf, F.lit(1.0)).otherwise(kf / r)
-        mu = joined.agg(
-            F.round(
-                F.sum(w * F.col("v") * F.col("c"))
-                / F.sum(w * F.col("c"))
-                * F.lit(float(_Q))
+    try:
+        med = _weighted_median(hist).localCheckpoint()
+        # deviation histogram |v − med|: med is interpolated (may be .5);
+        # work on the 2x integer grid so the deviations stay exact
+        dev_hist = (
+            hist.crossJoin(F.broadcast(med))
+            .select(
+                F.abs(
+                    F.col("v") * 2 - F.round(F.col("med") * 2).cast("long")
+                ).alias("v"),
+                F.col("c"),
             )
-            .cast("long")
-            .alias("muq"),
-            F.min("kq").alias("kq"),
-            F.min("mad").alias("mad"),
-            F.min("median").alias("median"),
-        ).localCheckpoint()
+            .groupBy("v")
+            .agg(F.sum("c").alias("c"))
+        )
+        mad = _weighted_median(dev_hist).select(
+            (F.col("med") / 2).alias("mad")
+        )
+        # k on the 1e-9 grid so both engines carry the identical constant
+        mu = (
+            med.crossJoin(F.broadcast(mad))
+            .select(
+                F.round(F.col("med") * F.lit(float(_Q))).cast("long").alias("muq"),
+                F.round(F.col("mad") * F.lit(float(k_mult)) * F.lit(float(_Q)))
+                .cast("long")
+                .alias("kq"),
+                F.round(F.col("mad"), 6).alias("mad"),
+                F.round(F.col("med"), 6).alias("median"),
+            )
+            .localCheckpoint()
+        )
+        for _ in range(int(n_iter)):
+            joined = hist.crossJoin(F.broadcast(mu))
+            muf = F.col("muq").cast("double") / F.lit(float(_Q))
+            kf = F.col("kq").cast("double") / F.lit(float(_Q))
+            r = F.abs(F.col("v").cast("double") - muf)
+            w = F.when(r <= kf, F.lit(1.0)).otherwise(kf / r)
+            mu = joined.agg(
+                F.round(
+                    F.sum(w * F.col("v") * F.col("c"))
+                    / F.sum(w * F.col("c"))
+                    * F.lit(float(_Q))
+                )
+                .cast("long")
+                .alias("muq"),
+                F.min("kq").alias("kq"),
+                F.min("mad").alias("mad"),
+                F.min("median").alias("median"),
+            ).localCheckpoint()
 
-    # n and mean from the histogram — Σv·c and Σc are exact integers,
-    # so the mean is one IEEE division (cross-engine identical)
-    stats = hist.agg(
-        F.sum("c").cast("long").alias("n"),
-        F.round(
-            F.sum(F.col("v") * F.col("c")).cast("double")
-            / F.sum("c").cast("double"),
-            6,
-        ).alias("mean"),
-    )
-    return stats.crossJoin(F.broadcast(mu)).select(
-        "n",
-        "mean",
-        "median",
-        "mad",
-        F.round(F.col("kq").cast("double") / F.lit(float(_Q)), 6).alias("k"),
-        F.round(F.col("muq").cast("double") / F.lit(float(_Q)), 6).alias(
-            "huber_mu"
-        ),
-        F.lit(int(n_iter)).cast("int").alias("n_iter"),
-    )
+        # n and mean from the histogram — Σv·c and Σc are exact integers,
+        # so the mean is one IEEE division (cross-engine identical)
+        stats = hist.agg(
+            F.sum("c").cast("long").alias("n"),
+            F.round(
+                F.sum(F.col("v") * F.col("c")).cast("double")
+                / F.sum("c").cast("double"),
+                6,
+            ).alias("mean"),
+        )
+        return stats.crossJoin(F.broadcast(mu)).select(
+            "n",
+            "mean",
+            "median",
+            "mad",
+            F.round(F.col("kq").cast("double") / F.lit(float(_Q)), 6).alias("k"),
+            F.round(F.col("muq").cast("double") / F.lit(float(_Q)), 6).alias(
+                "huber_mu"
+            ),
+            F.lit(int(n_iter)).cast("int").alias("n_iter"),
+        )
+    finally:
+        hist.unpersist()
 
 
 def _rhu(x: float) -> float:

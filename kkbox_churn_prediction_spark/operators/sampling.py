@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from kkbox_churn_prediction_spark.functions.text import stable_hash48
+from kkbox_churn_prediction_spark.operators.asof import collect_literal
 
 _BUCKETS = 2**20  # dyadic rate resolution: ~1e-6
 
@@ -562,9 +563,9 @@ def balance_weights(
     Shape: group sizes are one map-side-combined agg (K rows) joined
     back via broadcast; the corpus never shuffles.
     """
-    # sizes feeds both the broadcast join and the (N, K) totals — pin
-    # the K-row table so the corpus group-count runs once
-    sizes = df.groupBy(group_col).agg(F.count(F.lit(1)).alias("_ng")).persist()
+    # sizes feeds both the broadcast join and the (N, K) totals — a
+    # K-row literal, so the corpus group-count runs once
+    sizes = collect_literal(df.groupBy(group_col).agg(F.count(F.lit(1)).alias("_ng")))
     tot = sizes.agg(
         F.sum("_ng").alias("_n"), F.count(F.lit(1)).alias("_k")
     )
@@ -712,73 +713,74 @@ def rake_weights(
         F.col(row_col).alias("r"), F.col(col_col).alias("c")
     ).agg(F.count(F.lit(1)).cast("long").alias("n"))
     cells = cells.persist()
-    w = cells.select("r", "c", "n", F.lit(1.0).alias("w"))
-    n_rows_ = cells.select("r").distinct().count()
-    n_cols_ = cells.select("c").distinct().count()
-    if n_rows_ == 0 or n_cols_ == 0:
-        # empty panel: no margins to rake — zero rows out, in the
-        # OUTPUT schema (r5 empty-sweep: 1/0 crashed here)
-        return w.where(F.lit(False)).select(
-            F.col("r").alias("row_value"),
-            F.col("c").alias("col_value"),
-            F.col("n").alias("n_units"),
-            F.round(F.col("w"), 6).alias("weight"),
-            F.lit(None).cast("double").alias("weighted_share"),
-            F.lit(None).cast("double").alias("row_share_after"),
-            F.lit(None).cast("double").alias("col_share_after"),
-        )
-    tr = 1.0 / n_rows_
-    tc = 1.0 / n_cols_
-    from pyspark.sql import Window
+    try:
+        w = cells.select("r", "c", "n", F.lit(1.0).alias("w"))
+        n_rows_ = cells.select("r").distinct().count()
+        n_cols_ = cells.select("c").distinct().count()
+        if n_rows_ == 0 or n_cols_ == 0:
+            # empty panel: no margins to rake — zero rows out, in the
+            # OUTPUT schema (r5 empty-sweep: 1/0 crashed here)
+            return w.where(F.lit(False)).select(
+                F.col("r").alias("row_value"),
+                F.col("c").alias("col_value"),
+                F.col("n").alias("n_units"),
+                F.round(F.col("w"), 6).alias("weight"),
+                F.lit(None).cast("double").alias("weighted_share"),
+                F.lit(None).cast("double").alias("row_share_after"),
+                F.lit(None).cast("double").alias("col_share_after"),
+            )
+        tr = 1.0 / n_rows_
+        tc = 1.0 / n_cols_
+        from pyspark.sql import Window
 
-    # each scaling references w three ways (cells, margin sums, total);
-    # without lineage truncation the plan grows 3^2 per round — the
-    # components-module localCheckpoint discipline caps it, and the
-    # margin/total sums ride windows over the BOUNDED cell table (no
-    # self-join, no broadcast churn)
-    w_all = Window.partitionBy()
-    w_row = Window.partitionBy("r")
-    w_col = Window.partitionBy("c")
-    for _ in range(int(n_iter)):
-        w = w.select(
-            "r",
-            "c",
-            "n",
-            (
-                F.col("w")
-                * F.lit(tr)
-                * F.sum(F.col("w") * F.col("n")).over(w_all)
-                / F.sum(F.col("w") * F.col("n")).over(w_row)
-            ).alias("w"),
+        # each scaling references w three ways (cells, margin sums, total);
+        # without lineage truncation the plan grows 3^2 per round — the
+        # components-module localCheckpoint discipline caps it, and the
+        # margin/total sums ride windows over the BOUNDED cell table (no
+        # self-join, no broadcast churn)
+        w_all = Window.partitionBy()
+        w_row = Window.partitionBy("r")
+        w_col = Window.partitionBy("c")
+        for _ in range(int(n_iter)):
+            w = w.select(
+                "r",
+                "c",
+                "n",
+                (
+                    F.col("w")
+                    * F.lit(tr)
+                    * F.sum(F.col("w") * F.col("n")).over(w_all)
+                    / F.sum(F.col("w") * F.col("n")).over(w_row)
+                ).alias("w"),
+            )
+            w = w.select(
+                "r",
+                "c",
+                "n",
+                (
+                    F.col("w")
+                    * F.lit(tc)
+                    * F.sum(F.col("w") * F.col("n")).over(w_all)
+                    / F.sum(F.col("w") * F.col("n")).over(w_col)
+                ).alias("w"),
+            ).localCheckpoint(eager=True)
+        wn = F.col("w") * F.col("n")
+        out = (
+            w.select(
+                F.col("r").alias("row_value"),
+                F.col("c").alias("col_value"),
+                F.col("n").alias("n_units"),
+                F.round(F.col("w"), 6).alias("weight"),
+                F.round(wn / F.sum(wn).over(w_all), 6).alias("weighted_share"),
+                F.round(
+                    F.sum(wn).over(w_row) / F.sum(wn).over(w_all), 6
+                ).alias("row_share_after"),
+                F.round(
+                    F.sum(wn).over(w_col) / F.sum(wn).over(w_all), 6
+                ).alias("col_share_after"),
+            )
+            .orderBy("row_value", "col_value")
         )
-        w = w.select(
-            "r",
-            "c",
-            "n",
-            (
-                F.col("w")
-                * F.lit(tc)
-                * F.sum(F.col("w") * F.col("n")).over(w_all)
-                / F.sum(F.col("w") * F.col("n")).over(w_col)
-            ).alias("w"),
-        ).localCheckpoint(eager=True)
-    wn = F.col("w") * F.col("n")
-    out = (
-        w.select(
-            F.col("r").alias("row_value"),
-            F.col("c").alias("col_value"),
-            F.col("n").alias("n_units"),
-            F.round(F.col("w"), 6).alias("weight"),
-            F.round(wn / F.sum(wn).over(w_all), 6).alias("weighted_share"),
-            F.round(
-                F.sum(wn).over(w_row) / F.sum(wn).over(w_all), 6
-            ).alias("row_share_after"),
-            F.round(
-                F.sum(wn).over(w_col) / F.sum(wn).over(w_all), 6
-            ).alias("col_share_after"),
-        )
-        .orderBy("row_value", "col_value")
-    )
-    out = out.localCheckpoint(eager=True)
-    cells.unpersist()
-    return out
+        return out.localCheckpoint(eager=True)
+    finally:
+        cells.unpersist()

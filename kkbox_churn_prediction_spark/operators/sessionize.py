@@ -36,9 +36,10 @@ def sessionize(turns: DataFrame, gap_seconds: int = DEFAULT_GAP_SECONDS) -> Data
     """Add ``session_id`` (0-based per conversation) to each turn."""
     w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
     gap_us = F.unix_micros(F.col("ts")) - F.unix_micros(F.lag("ts").over(w))
-    new_session = F.when(
-        gap_us.isNull() | (gap_us > F.lit(int(gap_seconds) * 1_000_000)), 1
-    ).otherwise(0)
+    # one use of gap_us, so one lag; a NULL gap (first turn) starts a session
+    new_session = F.coalesce(
+        (gap_us > F.lit(int(gap_seconds) * 1_000_000)).cast("int"), F.lit(1)
+    )
     run = Window.partitionBy("conv_id").orderBy("ts", "turn_idx").rowsBetween(
         Window.unboundedPreceding, 0
     )
@@ -82,7 +83,7 @@ def sessionize_chunked(
     )
     w = Window.partitionBy("conv_id", "_chunk").orderBy("ts", "turn_idx")
     gap = F.unix_micros(F.col("ts")) - F.unix_micros(F.lag("ts").over(w))
-    new_local = F.when(gap.isNull() | (gap > F.lit(gap_us)), 1).otherwise(0)
+    new_local = F.coalesce((gap > F.lit(gap_us)).cast("int"), F.lit(1))
     run = w.rowsBetween(Window.unboundedPreceding, 0)
     local = chunked.withColumn(
         "_local_id", (F.sum(new_local).over(run) - F.lit(1)).cast("int")
@@ -245,8 +246,10 @@ def session_gap_sensitivity(
     → ONE global conditional-count agg → |gaps| rows via stack.
     """
     w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
-    gap_us = F.unix_micros(F.col("ts")) - F.unix_micros(F.lag("ts").over(w))
-    flags = turns.select(
+    gap_us = F.col("_gap_us")  # a column, so one lag serves every threshold
+    flags = turns.withColumn(
+        "_gap_us", F.unix_micros(F.col("ts")) - F.unix_micros(F.lag("ts").over(w))
+    ).select(
         F.when(gap_us.isNull(), F.lit(1)).otherwise(F.lit(0)).alias("_first"),
         *[
             F.when(gap_us > g * 1_000_000, F.lit(1))

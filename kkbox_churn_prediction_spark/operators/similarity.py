@@ -1144,7 +1144,7 @@ def lof_scores(
         F.col("query_id").alias("a"),
         F.col("neighbor_id").alias("b"),
         F.round(F.lit(1.0) - F.col("cosine"), 6).alias("dist"),
-    ).persist()
+    )
     kdist = edges.groupBy(F.col("a").alias("node")).agg(
         F.max("dist").alias("kdist")
     )
@@ -1322,55 +1322,58 @@ def mmr_rerank(
     picks = []
     selected = None
     lam_f = float(lam)
-    for rnd in range(1, int(k) + 1):
-        if selected is None:
-            scored = remaining.select(
-                "cand_id", "rel", (F.lit(lam_f) * F.col("rel")).alias("score")
-            )
-        else:
-            maxsim = (
-                sim_pairs.join(
-                    F.broadcast(selected.select(F.col("cand_id").alias("_sb"))),
-                    "_sb",
+    try:
+        for rnd in range(1, int(k) + 1):
+            if selected is None:
+                scored = remaining.select(
+                    "cand_id", "rel", (F.lit(lam_f) * F.col("rel")).alias("score")
                 )
-                .groupBy(F.col("_sa").alias("cand_id"))
-                .agg(F.max("sim").alias("_ms"))
+            else:
+                maxsim = (
+                    sim_pairs.join(
+                        F.broadcast(selected.select(F.col("cand_id").alias("_sb"))),
+                        "_sb",
+                    )
+                    .groupBy(F.col("_sa").alias("cand_id"))
+                    .agg(F.max("sim").alias("_ms"))
+                )
+                scored = remaining.join(maxsim, "cand_id", "left").select(
+                    "cand_id",
+                    "rel",
+                    (
+                        F.lit(lam_f) * F.col("rel")
+                        - F.lit(1.0 - lam_f) * F.coalesce("_ms", F.lit(0.0))
+                    ).alias("score"),
+                )
+            best = scored.agg(F.max("score").alias("_mx"))
+            pick = (
+                scored.crossJoin(F.broadcast(best))
+                .where(F.col("score") == F.col("_mx"))
+                .agg(
+                    F.min_by(
+                        F.struct("cand_id", "rel", "score"), F.col("cand_id")
+                    ).alias("p")
+                )
+                .select(
+                    F.lit(rnd).cast("int").alias("rank"),
+                    F.col("p.cand_id").alias("cand_id"),
+                    F.col("p.rel").alias("rel"),
+                    F.round("p.score", 6).alias("mmr_score"),
+                )
+                .localCheckpoint()
             )
-            scored = remaining.join(maxsim, "cand_id", "left").select(
-                "cand_id",
-                "rel",
-                (
-                    F.lit(lam_f) * F.col("rel")
-                    - F.lit(1.0 - lam_f) * F.coalesce("_ms", F.lit(0.0))
-                ).alias("score"),
-            )
-        best = scored.agg(F.max("score").alias("_mx"))
-        pick = (
-            scored.crossJoin(F.broadcast(best))
-            .where(F.col("score") == F.col("_mx"))
-            .agg(
-                F.min_by(
-                    F.struct("cand_id", "rel", "score"), F.col("cand_id")
-                ).alias("p")
-            )
-            .select(
-                F.lit(rnd).cast("int").alias("rank"),
-                F.col("p.cand_id").alias("cand_id"),
-                F.col("p.rel").alias("rel"),
-                F.round("p.score", 6).alias("mmr_score"),
-            )
-            .localCheckpoint()
-        )
-        picks.append(pick)
-        pk = pick.select("cand_id")
-        selected = (
-            pk if selected is None else selected.unionAll(pk)
-        ).localCheckpoint()
-        remaining = remaining.join(
-            F.broadcast(pick.select(F.col("cand_id").alias("_pc"))),
-            remaining["cand_id"] == F.col("_pc"),
-            "left_anti",
-        ).localCheckpoint()
+            picks.append(pick)
+            pk = pick.select("cand_id")
+            selected = (
+                pk if selected is None else selected.unionAll(pk)
+            ).localCheckpoint()
+            remaining = remaining.join(
+                F.broadcast(pick.select(F.col("cand_id").alias("_pc"))),
+                remaining["cand_id"] == F.col("_pc"),
+                "left_anti",
+            ).localCheckpoint()
+    finally:
+        sim_pairs.unpersist()
     out = picks[0]
     for p in picks[1:]:
         out = out.unionAll(p)

@@ -143,9 +143,7 @@ def skew_diagnosis(
     that bounded table — no approx sketch, no sort of the key table.
     """
     counts = turns.groupBy(key_col).agg(F.count(F.lit(1)).alias("c"))
-    # counts-of-counts feeds the cumulative CDF, the totals, and the
-    # p99 probe — pin the bounded table so the corpus agg runs once
-    cc = counts.groupBy("c").agg(F.count(F.lit(1)).alias("k")).persist()
+    cc = counts.groupBy("c").agg(F.count(F.lit(1)).alias("k"))
     from pyspark.sql import Window
 
     wc = Window.orderBy("c").rowsBetween(Window.unboundedPreceding, 0)

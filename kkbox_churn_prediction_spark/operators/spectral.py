@@ -102,79 +102,81 @@ def power_iteration_top_eigen(
         "j",
         F.round(F.col("cov") * F.lit(float(_CQ))).cast("long").alias("cq"),
     ).persist()
-
-    dims = mat.select("i").distinct()
-    w_all = Window.partitionBy()
-    d_cnt = F.count(F.lit(1)).over(w_all).cast("double")
-    v = dims.select(
-        F.col("i").alias("j"),
-        F.round(F.lit(float(_VQ)) / F.sqrt(d_cnt)).cast("long").alias("vq"),
-    ).localCheckpoint()
-
-    for _ in range(int(n_iter)):
-        s = (
-            mat.join(F.broadcast(v), "j")
-            .groupBy("i")
-            .agg(F.sum(F.col("cq") * F.col("vq")).alias("s"))
-        )
-        # exact squared norm (decimal — s² can exceed BIGINT)
-        norm = F.sqrt(
-            F.sum((F.col("s").cast("decimal(38,0)") * F.col("s")))
-            .over(w_all)
-            .cast("double")
-        )
-        v = s.select(
+    try:
+        dims = mat.select("i").distinct()
+        w_all = Window.partitionBy()
+        d_cnt = F.count(F.lit(1)).over(w_all).cast("double")
+        v = dims.select(
             F.col("i").alias("j"),
-            F.round(F.col("s").cast("double") / norm * F.lit(float(_VQ)))
-            .cast("long")
-            .alias("vq"),
+            F.round(F.lit(float(_VQ)) / F.sqrt(d_cnt)).cast("long").alias("vq"),
         ).localCheckpoint()
 
-    # Rayleigh quotient λ = vᵀCv / vᵀv in exact integer space; the
-    # single final division is IEEE-identical on both engines.
-    quad = (
-        mat.join(F.broadcast(v), "j")
-        .join(
-            F.broadcast(v.select(F.col("j").alias("i"), F.col("vq").alias("vq_i"))),
-            "i",
+        for _ in range(int(n_iter)):
+            s = (
+                mat.join(F.broadcast(v), "j")
+                .groupBy("i")
+                .agg(F.sum(F.col("cq") * F.col("vq")).alias("s"))
+            )
+            # exact squared norm (decimal — s² can exceed BIGINT)
+            norm = F.sqrt(
+                F.sum((F.col("s").cast("decimal(38,0)") * F.col("s")))
+                .over(w_all)
+                .cast("double")
+            )
+            v = s.select(
+                F.col("i").alias("j"),
+                F.round(F.col("s").cast("double") / norm * F.lit(float(_VQ)))
+                .cast("long")
+                .alias("vq"),
+            ).localCheckpoint()
+
+        # Rayleigh quotient λ = vᵀCv / vᵀv in exact integer space; the
+        # single final division is IEEE-identical on both engines.
+        quad = (
+            mat.join(F.broadcast(v), "j")
+            .join(
+                F.broadcast(v.select(F.col("j").alias("i"), F.col("vq").alias("vq_i"))),
+                "i",
+            )
+            .agg(
+                F.sum(
+                    F.col("vq_i").cast("decimal(38,0)") * F.col("cq") * F.col("vq")
+                ).alias("num")
+            )
         )
-        .agg(
-            F.sum(
-                F.col("vq_i").cast("decimal(38,0)") * F.col("cq") * F.col("vq")
-            ).alias("num")
+        den = v.agg(
+            F.sum(F.col("vq").cast("decimal(38,0)") * F.col("vq")).alias("den")
         )
-    )
-    den = v.agg(
-        F.sum(F.col("vq").cast("decimal(38,0)") * F.col("vq")).alias("den")
-    )
-    lam = quad.crossJoin(den).select(
-        (
-            F.col("num").cast("double")
-            / F.col("den").cast("double")
-            / F.lit(float(_CQ))
-        ).alias("eigenvalue")
-    )
-    # deterministic sign: coordinate of max |vq| (smallest dim on
-    # ties) made positive
-    sign_src = v.select(
-        F.max_by(
-            F.col("vq"), F.struct(F.abs(F.col("vq")).alias("a"), (-F.col("j")).alias("t"))
-        ).alias("pivot")
-    )
-    out = (
-        v.crossJoin(F.broadcast(sign_src))
-        .crossJoin(F.broadcast(lam))
-        .select(
-            F.col("j").cast("int").alias("dim"),
-            F.round(
-                F.when(F.col("pivot") < 0, -F.col("vq")).otherwise(F.col("vq"))
-                / F.lit(float(_VQ)),
-                6,
-            ).alias("loading"),
-            F.round("eigenvalue", 6).alias("eigenvalue"),
+        lam = quad.crossJoin(den).select(
+            (
+                F.col("num").cast("double")
+                / F.col("den").cast("double")
+                / F.lit(float(_CQ))
+            ).alias("eigenvalue")
         )
-    )
-    return out
+        # deterministic sign: coordinate of max |vq| (smallest dim on
+        # ties) made positive
+        sign_src = v.select(
+            F.max_by(
+                F.col("vq"), F.struct(F.abs(F.col("vq")).alias("a"), (-F.col("j")).alias("t"))
+            ).alias("pivot")
+        )
+        out = (
+            v.crossJoin(F.broadcast(sign_src))
+            .crossJoin(F.broadcast(lam))
+            .select(
+                F.col("j").cast("int").alias("dim"),
+                F.round(
+                    F.when(F.col("pivot") < 0, -F.col("vq")).otherwise(F.col("vq"))
+                    / F.lit(float(_VQ)),
+                    6,
+                ).alias("loading"),
+                F.round("eigenvalue", 6).alias("eigenvalue"),
+            )
+        )
+        return out
+    finally:
+        mat.unpersist()
 
 
 def _power_iteration_driver(cov_upper: DataFrame, n_iter: int) -> DataFrame:
@@ -389,9 +391,7 @@ def hits_scores(
 
     Output: one row per src node ``(src, hub, n_dst, total_w)``.
     """
-    mat = edges.select(
-        F.col("src"), F.col("dst"), F.col("w").cast("long").alias("w")
-    ).persist()
+    mat = edges.select(F.col("src"), F.col("dst"), F.col("w").cast("long").alias("w"))
     hub, _ = _hits_dispatch(mat, n_iter, mode)
     deg = mat.groupBy("src").agg(
         F.countDistinct("dst").cast("long").alias("n_dst"),
@@ -406,16 +406,21 @@ def hits_scores(
 
 
 def _hits_dispatch(mat: DataFrame, n_iter: int, mode: str):
+    """The (hub, auth) fixed point, materialized: the edge count and
+    every half-step re-read ``mat``, so it is cached only while they
+    run."""
     if mode not in ("auto", "driver", "distributed"):
         raise ValueError(f"unknown mode {mode!r}")
-    if mode == "auto":
-        max_rows = driver_replay_max_rows(
-            mat.sparkSession, _HITS_DRIVER_MAX_EDGES
-        )
-        mode = "driver" if mat.count() <= max_rows else "distributed"
-    if mode == "driver":
-        return _hits_fixed_point_driver(mat, int(n_iter))
-    return _hits_fixed_point(mat, int(n_iter))
+    mat = mat.persist()
+    try:
+        if mode == "auto":
+            max_rows = driver_replay_max_rows(mat.sparkSession, _HITS_DRIVER_MAX_EDGES)
+            mode = "driver" if mat.count() <= max_rows else "distributed"
+        if mode == "driver":
+            return _hits_fixed_point_driver(mat, int(n_iter))
+        return _hits_fixed_point(mat, int(n_iter))
+    finally:
+        mat.unpersist()
 
 
 def hits_authorities(
@@ -425,9 +430,7 @@ def hits_authorities(
     ``(dst, authority, n_src, total_w)`` from the identical half-step
     schedule, so the hub and authority frames are mutually
     consistent."""
-    mat = edges.select(
-        F.col("src"), F.col("dst"), F.col("w").cast("long").alias("w")
-    ).persist()
+    mat = edges.select(F.col("src"), F.col("dst"), F.col("w").cast("long").alias("w"))
     _, auth = _hits_dispatch(mat, n_iter, mode)
     deg = mat.groupBy("dst").agg(
         F.countDistinct("src").cast("long").alias("n_src"),

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from kkbox_churn_prediction_spark.operators.asof import cutoff_grid
+from kkbox_churn_prediction_spark.operators.asof import collect_literal, cutoff_grid
 from kkbox_churn_prediction_spark.operators.labels import first_qualifying_after
 
 _US_PER_DAY = 86_400_000_000.0
@@ -525,18 +525,18 @@ def survival_c_index(
     s: Column = F.col(score_col)
     if max_score_bins is not None:
         s = F.floor(s.cast("double") * F.lit(int(max_score_bins))).cast("long")
-    from pyspark import StorageLevel
-
-    # the unit-count action and the pair reduce both read the slim
-    # base — persist it so the label build runs once
+    # the grid, the windows and the unit count all read the cell table:
+    # a literal, so the label build runs once
     base = labels.select(
         F.col("duration_days").cast("int").alias("t"),
         F.col("observed").cast("int").alias("e"),
         s.cast("long").alias("s"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    cells = base.groupBy("t", "s").agg(
-        F.count(F.lit(1)).cast("long").alias("m"),
-        F.sum("e").cast("long").alias("ev"),
+    )
+    cells = collect_literal(
+        base.groupBy("t", "s").agg(
+            F.count(F.lit(1)).cast("long").alias("m"),
+            F.sum("e").cast("long").alias("ev"),
+        )
     )
     ts = cells.select("t").distinct()
     ss = cells.select("s").distinct()
@@ -577,7 +577,7 @@ def survival_c_index(
         F.sum("_tie").cast("long").alias("n_tied_score"),
         F.sum("_comp").cast("long").alias("n_comparable_pairs"),
     )
-    n_units = base.count()
+    n_units = cells.agg(F.coalesce(F.sum("m"), F.lit(0)).cast("long").alias("n_units"))
     c = F.when(
         F.col("n_comparable_pairs") > 0,
         (
@@ -586,8 +586,8 @@ def survival_c_index(
         )
         / F.col("n_comparable_pairs").cast("double"),
     )
-    return red.select(
-        F.lit(int(n_units)).cast("long").alias("n_units"),
+    return red.crossJoin(n_units).select(
+        "n_units",
         "n_comparable_pairs",
         "n_concordant",
         "n_tied_score",

@@ -628,10 +628,7 @@ def source_overlap(
         )
         .select("src", stable_hash48(F.col("_sh")).alias("gh"))
         .distinct()
-        # referenced by both join sides AND the totals — persist the
-        # per-source vocabulary (distinct grams, a sliver of the
-        # corpus) so the corpus explode runs exactly once; blocks are
-        # evictable and ContextCleaner reclaims them with the plan
+        # kept: both join sides and the totals of the returned plan read it
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     a = sg.select(F.col("src").alias("source_a"), "gh")
@@ -690,15 +687,6 @@ def zipf_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    # words is replayed by the rank components' quantile probe, the
-    # totals agg, and the regression points — persist the vocab-sized
-    # table so the corpus explode+shuffle above runs exactly once
-    # (Heaps' law keeps the vocabulary a sliver of the corpus; the
-    # cached blocks are evictable and ContextCleaner reclaims them
-    # when the plan is released)
-    from pyspark import StorageLevel
-
-    words = words.persist(StorageLevel.MEMORY_AND_DISK)
     comp = value_rank_components(words, "c")  # (c, _cnt words, _before)
     # vocab size V and token total ride one-row broadcasts
     tot = comp.agg(
@@ -896,7 +884,7 @@ def dsir_scores(
             "_t",
             F.pmod(stable_hash48(F.col("_w")), F.lit(nb)).alias("b"),
         )
-        .persist()
+        .persist()  # kept: the returned bucket counts and score join both read it
     )
     buckets = toks.groupBy("b").agg(
         F.sum(F.when(F.col("_t"), 1).otherwise(0)).cast("long").alias("tc"),
@@ -1455,6 +1443,7 @@ def source_tf_cosine(
         .select("src", stable_hash48(F.col("_t")).alias("gh"))
         .groupBy("src", "gh")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
+        # kept: both pair-join sides and the norms of the returned plan read it
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     a = tc.select(F.col("src").alias("source_a"), "gh", F.col("c").alias("c_a"))
@@ -1526,6 +1515,8 @@ def kneser_ney_logprob_score(
     bg = df.select(
         F.col(id_col), F.explode(all_word_ngrams(norm, 2)).alias("bigram")
     )
+    # kept: the vocab-sized bigram table feeds the context, predecessor
+    # and type counts of the returned plan
     bcnt = bg.groupBy("bigram").agg(F.count(F.lit(1)).alias("c12")).persist()
     split = bcnt.select(
         "bigram",
@@ -2173,7 +2164,8 @@ def bpe_train_merges(
         return spark.createDataFrame(out, schema)
 
     # distributed rounds: vocab-sized pair agg + 1-row argmax collect
-    reps_df = words.select(
+    # cached while the rounds read it; each round checkpoints its rewrite
+    reps_df = cached = words.select(
         F.concat(
             F.lit("|"),
             F.array_join(F.split(F.col("word"), ""), "||"),
@@ -2182,40 +2174,42 @@ def bpe_train_merges(
         "wf",
     ).persist()
     out = []
-    for rank in range(1, n_merges + 1):
-        syms = reps_df.select(
-            F.split(F.expr("substr(rep, 2, length(rep) - 2)"), r"\|\|").alias("l"),
-            "wf",
-        )
-        pairs = syms.select(
-            F.explode(F.sequence(F.lit(1), F.size("l") - 1)).alias("i"),
-            "l",
-            "wf",
-        ).select(
-            F.col("l")[F.col("i") - 1].alias("a"),
-            F.col("l")[F.col("i")].alias("b"),
-            "wf",
-        )
-        best = (
-            pairs.groupBy("a", "b")
-            .agg(F.sum("wf").cast("long").alias("c"))
-            .orderBy(F.desc("c"), "a", "b")
-            .limit(1)
-            .collect()
-        )
-        if not best:
-            break
-        a, b, c = best[0]["a"], best[0]["b"], best[0]["c"]
-        out.append((rank, a, b, a + b, int(c)))
-        nxt = reps_df.select(
-            F.replace(
-                F.col("rep"), F.lit(f"|{a}||{b}|"), F.lit(f"|{a}{b}|")
-            ).alias("rep"),
-            "wf",
-        ).localCheckpoint(eager=True)
-        reps_df.unpersist()
-        reps_df = nxt
-    reps_df.unpersist()
+    try:
+        for rank in range(1, n_merges + 1):
+            syms = reps_df.select(
+                F.split(F.expr("substr(rep, 2, length(rep) - 2)"), r"\|\|").alias("l"),
+                "wf",
+            )
+            pairs = syms.select(
+                # a one-symbol word has no pair (sequence(1, 0) counts down)
+                F.explode(F.when(F.size("l") > 1, F.sequence(F.lit(1), F.size("l") - 1)))
+                .alias("i"),
+                "l",
+                "wf",
+            ).select(
+                F.col("l")[F.col("i") - 1].alias("a"),
+                F.col("l")[F.col("i")].alias("b"),
+                "wf",
+            )
+            best = (
+                pairs.groupBy("a", "b")
+                .agg(F.sum("wf").cast("long").alias("c"))
+                .orderBy(F.desc("c"), "a", "b")
+                .limit(1)
+                .collect()
+            )
+            if not best:
+                break
+            a, b, c = best[0]["a"], best[0]["b"], best[0]["c"]
+            out.append((rank, a, b, a + b, int(c)))
+            reps_df = reps_df.select(
+                F.replace(
+                    F.col("rep"), F.lit(f"|{a}||{b}|"), F.lit(f"|{a}{b}|")
+                ).alias("rep"),
+                "wf",
+            ).localCheckpoint(eager=True)
+    finally:
+        cached.unpersist()
     return spark.createDataFrame(out, schema)
 
 

@@ -29,8 +29,10 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from kkbox_churn_prediction_spark.operators.asof import collect_literal
 
 
 def _round_half_up(x: float) -> float:
@@ -40,6 +42,16 @@ def _round_half_up(x: float) -> float:
     return math.floor(x + 0.5) if x >= 0 else math.ceil(x - 0.5)
 
 DAY_US = 86_400_000_000  # one UTC day in microseconds
+
+
+def _daily(turns: DataFrame, *aggs: Column) -> DataFrame:
+    """``(d, *aggs)`` per calendar day of ``ts``, collected into a
+    literal relation: the series is bounded by the calendar and its
+    callers read it from several branches, so one Spark job aggregates
+    the stream and no cache entry outlives the call."""
+    return collect_literal(
+        turns.groupBy(F.date_trunc("day", F.col("ts")).alias("d")).agg(*aggs)
+    )
 
 
 def rolling_interval_stats(
@@ -390,16 +402,11 @@ def ewma_daily(
     tiny-profile exemption as daily_anomalies/daily_acf.
     """
     h = int(halving_days)
-    daily = turns.groupBy(F.date_trunc("day", F.col("ts")).alias("d")).agg(
-        F.count(F.lit(1)).cast("long").alias("n_turns")
-    )
-    # both sides of the pair join read the daily table — persist the
-    # bounded series so the corpus aggregates once
-    days = daily.select(
+    days = _daily(turns, F.count(F.lit(1)).cast("long").alias("n_turns")).select(
         "d",
         F.floor(F.unix_micros(F.col("d")) / F.lit(86400 * 1_000_000)).alias("_dn"),
         "n_turns",
-    ).persist()
+    )
     past = days.select(
         F.col("_dn").alias("_dni"), F.col("n_turns").alias("_xi")
     )
@@ -531,11 +538,7 @@ def daily_anomalies_deseasonalized(
     Shape: stream → daily agg (one corpus shuffle) → 7-row dow table
     broadcast back → trailing window over the bounded daily series.
     """
-    # the dow-means branch and the residual join both read the daily
-    # table — persist the bounded series so the corpus aggregates once
-    daily = turns.groupBy(F.date_trunc("day", F.col("ts")).alias("d")).agg(
-        F.count(F.lit(1)).cast("long").alias("n_turns")
-    ).persist()
+    daily = _daily(turns, F.count(F.lit(1)).cast("long").alias("n_turns"))
     with_dow = daily.withColumn(
         "_dow", (F.weekday(F.col("d")) + F.lit(1)).cast("int")
     )
@@ -637,11 +640,7 @@ def seasonal_naive_eval(
     double ratios over the bounded daily table (6dp-rounded output).
     """
     dec = "decimal(38,0)"
-    # three branches (actuals + two forecast joins) read the daily
-    # table — persist the bounded series so the corpus aggregates once
-    daily = turns.groupBy(F.date_trunc("day", F.col("ts")).alias("d")).agg(
-        F.count(F.lit(1)).cast("long").alias("y")
-    ).persist()
+    daily = _daily(turns, F.count(F.lit(1)).cast("long").alias("y"))
     season = daily.select(
         (F.col("d") + F.expr(f"INTERVAL {int(season_days)} DAYS")).alias("d"),
         F.col("y").alias("y_hat"),
@@ -863,15 +862,10 @@ def theil_sen_daily(turns: DataFrame, exact: bool = True) -> DataFrame:
     trend ratios), made robust.
     """
     day_us = 86400 * 1_000_000
-    daily = turns.groupBy(F.date_trunc("day", F.col("ts")).alias("d")).agg(
-        F.count(F.lit(1)).cast("long").alias("x")
-    )
-    days = daily.select(
+    days = _daily(turns, F.count(F.lit(1)).cast("long").alias("x")).select(
         F.floor(F.unix_micros(F.col("d")) / F.lit(day_us)).cast("long").alias("dn"),
         "x",
-    ).persist()  # referenced by BOTH pair sides and the residual pass —
-    # without the pin the corpus day-agg re-runs 3× (the re-derived-
-    # intermediate class of plan bug the spearman family hit)
+    )
     a = days.alias("a")
     b = days.alias("b")
     pairs = a.join(b, F.col("b.dn") < F.col("a.dn")).select(
@@ -1002,13 +996,10 @@ def periodogram_daily(
     """
     two_pi = 6.283185307179586
     day_us = 86400 * 1_000_000
-    daily = turns.groupBy(F.date_trunc("day", F.col("ts")).alias("d")).agg(
-        F.count(F.lit(1)).cast("long").alias("x")
-    )
-    days = daily.select(
+    days = _daily(turns, F.count(F.lit(1)).cast("long").alias("x")).select(
         F.floor(F.unix_micros(F.col("d")) / F.lit(day_us)).cast("long").alias("dn"),
         "x",
-    ).persist()  # referenced by the stats row AND the term table
+    )
     stats = days.agg(
         F.count(F.lit(1)).cast("long").alias("n_days"),
         F.sum("x").cast("long").alias("sx"),
@@ -1140,14 +1131,11 @@ def brown_double_daily(
     anywhere). The whole computation after the one corpus day-agg
     runs on the calendar-bounded daily series.
     """
-    daily = turns.groupBy(F.date_trunc("day", F.col("ts")).alias("d")).agg(
-        F.count(F.lit(1)).cast("long").alias("n_turns")
-    )
-    days = daily.select(
+    days = _daily(turns, F.count(F.lit(1)).cast("long").alias("n_turns")).select(
         "d",
         F.floor(F.unix_micros(F.col("d")) / F.lit(86400 * 1_000_000)).alias("_dn"),
         "n_turns",
-    ).persist()
+    )
     s1 = _staircase_smooth(days, "_dn", "n_turns", halving_days, "s1")
     s2 = _staircase_smooth(s1, "_dn", "s1", halving_days, "s2")
     w_prev = Window.orderBy("_dn")
@@ -1195,16 +1183,15 @@ def quantile_trend_daily(
     integer moments).
 
     Execution modes (the sessionize-auto-switch pattern — equal
-    outputs, pytest-asserted): ``mode="driver"`` collects the
-    calendar-bounded ``(t, x)`` daily table ONCE and replays the
-    identical quantized IRLS in Python doubles — one Spark job
-    instead of ``n_iter + 2``, the right shape because the iterate is
-    day-count-sized by construction (a DECADE of days is ~3.7k rows).
-    ``mode="distributed"`` keeps the per-step normal-equation sums on
-    the cluster (the prior shape). ``mode="auto"`` (default) collects
-    up to ``max_driver_days + 1`` rows and replays driver-side when
-    the table fits (≈179 years of days at the default), falling back
-    to distributed otherwise.
+    outputs, pytest-asserted): every mode collects the
+    calendar-bounded daily table ONCE into a literal (a DECADE of
+    days is ~3.7k rows). ``mode="driver"`` replays the identical
+    quantized IRLS in Python doubles — no further Spark job, where
+    the per-step sums take ``n_iter + 1``. ``mode="distributed"``
+    keeps the per-step normal-equation sums as Spark jobs over the
+    literal (the prior shape). ``mode="auto"`` (default) replays
+    driver-side when the table has at most ``max_driver_days`` rows
+    (≈179 years of days at the default), distributed otherwise.
 
     Output (one row): ``(n_days, tau, slope, intercept,
     pinball_loss)`` — slope in turns/day at the τ-quantile.
@@ -1213,9 +1200,7 @@ def quantile_trend_daily(
         raise ValueError(f"unknown mode {mode!r}")
     day_us = 86400 * 1_000_000
     q = 1_000_000_000
-    daily = turns.groupBy(F.date_trunc("day", F.col("ts")).alias("d")).agg(
-        F.count(F.lit(1)).cast("long").alias("x")
-    )
+    daily = _daily(turns, F.count(F.lit(1)).cast("long").alias("x"))
     mind = daily.agg(
         F.min(F.floor(F.unix_micros(F.col("d")) / F.lit(day_us)).cast("long")).alias(
             "m"
@@ -1226,9 +1211,9 @@ def quantile_trend_daily(
         "x",
     )
     if mode != "distributed":
-        # ONE scan: collect the un-rebased (day, x) table (limit(max+1)
-        # makes the collect the size probe too) and rebase driver-side
-        # — the exact integer subtraction the mind crossJoin performs
+        # read the un-rebased (day, x) literal (limit(max+1) is the
+        # size probe) and rebase driver-side — the exact integer
+        # subtraction the mind crossJoin performs
         from kkbox_churn_prediction_spark.operators.replay import (
             driver_replay_max_rows,
         )
@@ -1254,10 +1239,8 @@ def quantile_trend_daily(
                 int(n_iter),
                 q,
             )
-    pts = (
-        dn_plan.crossJoin(F.broadcast(mind))
-        .select((F.col("dn") - F.col("m")).alias("t"), "x")
-        .persist()
+    pts = dn_plan.crossJoin(F.broadcast(mind)).select(
+        (F.col("dn") - F.col("m")).alias("t"), "x"
     )
 
     def _solve(weighted) -> "DataFrame":
@@ -1440,10 +1423,8 @@ def rolling_active_entities(
     """
     from pyspark import StorageLevel
 
-    # pairs feeds three consumers (max-day bound, cover explode, same-day
-    # counts) — pin the entity-day table so the corpus scan+dedup runs
-    # once (entity-days ≪ turns; evictable MEMORY_AND_DISK, the zipf
-    # vocab-persist rationale)
+    # kept: the max-day bound, cover explode and same-day counts of the
+    # returned plan read the entity-day table (entity-days ≪ turns)
     pairs = (
         turns.select(
             "conv_id",
@@ -1515,20 +1496,10 @@ def ccf_daily(
     one-row broadcasts, and the per-lag products stack through ONE
     explode so all 2·max_lag+1 lags share a single window sort.
     """
-    # daily feeds the means, the deviations, and (through dev) the
-    # denominators and lag stack — pin the calendar-bounded series so
-    # the corpus collapse runs once
-    daily = (
-        turns.groupBy(F.date_trunc("day", F.col("ts")).alias("d"))
-        .agg(
-            F.sum(F.when(F.col("role") == role_a, 1).otherwise(0))
-            .cast("double")
-            .alias("a"),
-            F.sum(F.when(F.col("role") == role_b, 1).otherwise(0))
-            .cast("double")
-            .alias("b"),
-        )
-        .persist()
+    daily = _daily(
+        turns,
+        F.sum(F.when(F.col("role") == role_a, 1).otherwise(0)).cast("double").alias("a"),
+        F.sum(F.when(F.col("role") == role_b, 1).otherwise(0)).cast("double").alias("b"),
     )
     mu = daily.agg(F.avg("a").alias("_ma"), F.avg("b").alias("_mb"))
     dev = daily.crossJoin(F.broadcast(mu)).select(
@@ -1607,11 +1578,7 @@ def mann_kendall_daily(turns: DataFrame) -> DataFrame:
     on the same daily frame; the three one-row frames meet through
     broadcast cross joins.
     """
-    daily = (
-        turns.groupBy(F.date_trunc("day", F.col("ts")).alias("d"))
-        .agg(F.count(F.lit(1)).cast("long").alias("x"))
-        .persist()
-    )
+    daily = _daily(turns, F.count(F.lit(1)).cast("long").alias("x"))
     li = daily.select(
         F.col("d").alias("di"), F.col("x").alias("xi")
     )
@@ -1749,23 +1716,16 @@ def granger_daily(
     rows. Degenerate guards: a singular design (zero variance in a
     predictor) or m ≤ 3 yields NULL F rather than a division blow-up.
 
-    Shape: ONE conditional-agg day collapse (persisted), one
+    Shape: ONE conditional-agg day collapse (collected), one
     day-ordered lag projection on the calendar-bounded daily series
     (daily_anomalies exemption), ONE exact-moment agg, then pure
     scalar algebra stacked into the two direction rows via explode.
     """
     dec = "decimal(38,0)"
-    daily = (
-        turns.groupBy(F.date_trunc("day", F.col("ts")).alias("d"))
-        .agg(
-            F.sum(F.when(F.col("role") == role_a, 1).otherwise(0))
-            .cast("long")
-            .alias("a"),
-            F.sum(F.when(F.col("role") == role_b, 1).otherwise(0))
-            .cast("long")
-            .alias("b"),
-        )
-        .persist()
+    daily = _daily(
+        turns,
+        F.sum(F.when(F.col("role") == role_a, 1).otherwise(0)).cast("long").alias("a"),
+        F.sum(F.when(F.col("role") == role_b, 1).otherwise(0)).cast("long").alias("b"),
     )
     w = Window.orderBy("d")
     lagged = daily.select(
@@ -1886,17 +1846,10 @@ def holt_linear_daily(
     """
     day_us = 86400 * 1_000_000
     af, bf = float(alpha), float(beta)
-    daily = (
-        turns.groupBy(F.date_trunc("day", F.col("ts")).alias("d"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_turns"))
-        .select(
-            "d",
-            F.floor(F.unix_micros(F.col("d")) / F.lit(day_us))
-            .cast("long")
-            .alias("dn"),
-            "n_turns",
-        )
-        .persist()
+    daily = _daily(turns, F.count(F.lit(1)).cast("long").alias("n_turns")).select(
+        "d",
+        F.floor(F.unix_micros(F.col("d")) / F.lit(day_us)).cast("long").alias("dn"),
+        "n_turns",
     )
 
     def fit(pdf):
@@ -2063,17 +2016,10 @@ def holt_winters_daily(
     """
     day_us = 86400 * 1_000_000
     af, bf, gf, m = float(alpha), float(beta), float(gamma), int(period)
-    daily = (
-        turns.groupBy(F.date_trunc("day", F.col("ts")).alias("d"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_turns"))
-        .select(
-            "d",
-            F.floor(F.unix_micros(F.col("d")) / F.lit(day_us))
-            .cast("long")
-            .alias("dn"),
-            "n_turns",
-        )
-        .persist()
+    daily = _daily(turns, F.count(F.lit(1)).cast("long").alias("n_turns")).select(
+        "d",
+        F.floor(F.unix_micros(F.col("d")) / F.lit(day_us)).cast("long").alias("dn"),
+        "n_turns",
     )
     n_days = daily.count()
     if n_days < 2 * m:

@@ -76,10 +76,10 @@ def read_csv_tolerant(
         mode="PERMISSIVE",
         columnNameOfCorruptRecord=CORRUPT_COL,
     )
-    # Spark disallows filtering on ONLY the corrupt column of a lazy
-    # csv relation (internal-column-only queries raise); caching the
-    # parsed frame is the documented escape hatch and also makes the
-    # clean/corrupt split single-scan.
+    # kept: Spark disallows filtering on ONLY the corrupt column of a
+    # lazy csv relation (internal-column-only queries raise); caching
+    # the parsed frame is the documented escape hatch and also makes
+    # the clean/corrupt split single-scan. The caller owns the entry.
     raw = raw.cache()
     clean = raw.where(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     corrupt = raw.where(F.col(CORRUPT_COL).isNotNull()).select(CORRUPT_COL)

@@ -58,7 +58,7 @@ def read_jsonl_tolerant(
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", CORRUPT_COL)
         .json(path)
-        .cache()  # one parse feeds both splits (Spark requires the
+        .cache()  # kept: one parse feeds both splits (Spark requires the
         # corrupt column to be materialized before filtering on it)
     )
     clean = raw.where(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)

@@ -265,11 +265,14 @@ def test_duplicate_spans_probe_reads_cached_grams(spark):
 
 
 def test_jsd_single_scan_no_global_sort(spark):
-    """jsd_text_len: ONE corpus scan feeding the (fold, bin) count agg;
-    every window after it is partitioned by fold (no single-partition
-    global sort)."""
+    """jsd_text_len: ONE corpus scan feeds the (fold, bin) count agg,
+    which is collected into a literal before the plan is returned — so
+    the returned plan scans no file and reads the counts from a
+    LocalTableScan; every window after it is partitioned by fold (no
+    single-partition global sort)."""
     plan = _final_plan(spark, "jsd_text_len")
-    assert plan.count("Scan parquet") == 1
+    assert plan.count("Scan parquet") == 0
+    assert "LocalTableScan" in plan
     assert "Sort [" not in plan.split("Exchange SinglePartition")[0] or True
     # the only acceptable SinglePartition exchange is the final tiny
     # fold-level aggregate (≤ #folds rows); the bin stream itself must
@@ -535,3 +538,26 @@ def test_levene_no_window_joins_on_group_key(spark):
     Window machinery."""
     plan = _plan(spark, "levene_roles")
     assert "Window" not in plan
+
+
+def test_each_lag_is_computed_once(spark):
+    """A lag read twice in one expression is evaluated twice: the
+    optimized plans of the sessionization and lag/lead operators hold
+    one lag(ts), and lag_lead_features one lag(role)."""
+    import re
+
+    from kkbox_churn_prediction_spark.operators.lags import lag_lead_features
+    from kkbox_churn_prediction_spark.operators.sessionize import (
+        session_aggregates,
+        session_gap_sensitivity,
+    )
+    from kkbox_churn_prediction_spark.sources.events import conversations_from_events
+
+    turns = conversations_from_events(spark, SF)
+    for df, col in (
+        (session_aggregates(turns), "ts"),
+        (session_gap_sensitivity(turns), "ts"),
+        (lag_lead_features(turns), "role"),
+    ):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert len(re.findall(rf"lag\({col}#", plan)) == 1
